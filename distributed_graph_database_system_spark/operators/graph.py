@@ -6,7 +6,10 @@ Reference parity (see SURVEY.md §2.1):
   ``fopen(...,"w")`` truncation at ``primaryServer.c:40-63``).
 - R4 BFS                         → ``bfs`` (reference level-synchronous BFS,
   ``secondaryServer.c:111-179``; its per-level thread barrier maps 1:1 to one
-  Spark job per level).
+  frontier round — not to one Spark job: a round runs the exchanges and
+  broadcasts AQE submits as jobs of their own, the frontier's checkpoint
+  and the ``take(1)`` stop probe, 4.3 jobs per round on average in a
+  traced perfbench ``graph_ops`` run on 4 cores).
 - R3 DFS leaf-set                → ``dfs_leaves`` (reference threaded DFS,
   ``secondaryServer.c:56-108``; a vertex is emitted iff it spawned zero
   recursive visits, start excluded per ``secondaryServer.c:290``).
@@ -29,10 +32,31 @@ from __future__ import annotations
 import os
 from collections.abc import Callable, Sequence
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 EDGE_SCHEMA = "src BIGINT, dst BIGINT"
+
+
+def _local_frame(
+    spark: SparkSession, rows: Sequence[tuple], schema: str
+) -> DataFrame:
+    """Driver-side ``rows`` as a JVM-local relation with DDL ``schema``.
+
+    ``createDataFrame`` over a Python list builds a Python RDD (pickled
+    rows through ``applySchemaToPythonRDD``), which every plan over it
+    reads as a ``Scan ExistingRDD``. An Arrow table under
+    ``spark.sql.execution.arrow.localRelationThreshold`` becomes a
+    ``LocalRelation`` instead (``LocalTableScan`` in the plan): no job to
+    build it, no lineage to checkpoint away. Every seed and small reply in
+    this module is built here."""
+    struct = StructType.fromDDL(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(struct.fields)
+    return spark.createDataFrame(
+        pa.table(dict(zip(struct.fieldNames(), cols))), struct
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -139,7 +163,9 @@ class GraphStore:
             # through the catalog: keeps the bucket spec so src-keyed joins
             # skip the edge-side Exchange
             return self.spark.table(self.table_name(name))
-        return self.spark.read.parquet(self.path(name))
+        # _write always stores EDGE_SCHEMA: declaring it skips the footer
+        # schema-inference job every plain read would otherwise start
+        return self.spark.read.schema(EDGE_SCHEMA).parquet(self.path(name))
 
     def exists(self, name: str) -> bool:
         # Hadoop FileSystem API, not os.path: add/modify/load already accept
@@ -156,14 +182,20 @@ class GraphStore:
     # Reference input format: n + dense 0/1 adjacency matrix
     # (``client.c:77-94``). Matrix cell [i][j]==1 ⇔ directed edge i+1 → j+1
     # (1-indexed externally, ``secondaryServer.c:266,292``).
+    # Every cell goes through ``validate_matrix_row``, the same check as the
+    # reference-file door: exactly ``n`` rows of ``n`` cells, each 0 or 1.
     def edges_from_matrix(self, n: int, matrix: Sequence[Sequence[int]]) -> DataFrame:
+        if len(matrix) != n:
+            raise ValueError(
+                f"matrix has {len(matrix)} rows (expected exactly {n})"
+            )
         rows = [
             (i + 1, j + 1)
             for i in range(n)
-            for j in range(n)
-            if matrix[i][j]
+            for j, cell in enumerate(self.validate_matrix_row(matrix[i], n, i))
+            if cell
         ]
-        return self.spark.createDataFrame(rows, EDGE_SCHEMA)
+        return _local_frame(self.spark, rows, EDGE_SCHEMA)
 
     def add_matrix(self, name: str, n: int, matrix: Sequence[Sequence[int]]) -> None:
         self.add(name, self.edges_from_matrix(n, matrix))
@@ -177,24 +209,25 @@ class GraphStore:
     # load directly.
     @staticmethod
     def validate_matrix_row(
-        tokens: Sequence[str], n: int, row_idx: int
+        tokens: Sequence[str | int], n: int, row_idx: int
     ) -> list[int]:
-        """THE single cell validator for the at-rest format — shared by
-        the whole-file driver parse below and the block-local Spark source
-        (sources/refgraph.py), so the validation contract cannot diverge
-        between the two doors: exactly ``n`` integer cells per row (a
-        non-integer raises the int() ValueError), each 0 or 1 (anything
-        else is rejected rather than silently treated as truthy)."""
+        """THE single cell validator — shared by the in-memory matrix door
+        (``edges_from_matrix``), the whole-file driver parse below and the
+        block-local Spark source (sources/refgraph.py), so the validation
+        contract cannot diverge between the doors: exactly ``n`` integer
+        cells per row (a non-integer string raises the int() ValueError),
+        each 0 or 1 (anything else is rejected rather than silently treated
+        as truthy)."""
         cells = [int(t) for t in tokens]
         if len(cells) != n:
             raise ValueError(
-                f"graph file row {row_idx}: {len(cells)} matrix cells "
+                f"matrix row {row_idx}: {len(cells)} matrix cells "
                 f"(expected exactly {n})"
             )
         for j, cell in enumerate(cells):
             if cell not in (0, 1):
                 raise ValueError(
-                    f"graph file cell [{row_idx}][{j}] = {cell}; the "
+                    f"matrix cell [{row_idx}][{j}] = {cell}; the "
                     "matrix must be 0/1"
                 )
         return cells
@@ -242,25 +275,27 @@ def bfs(edges: DataFrame, start: int, max_iter: int = 10_000) -> DataFrame:
 
     Each iteration = frontier ⋈ edges (expansion) → anti-join visited (the
     reference's ``!visited`` check, ``secondaryServer.c:115``) → union into
-    visited. Only the per-level FRONTIER is ``localCheckpoint``-ed (it both
+    visited. The level-0 seed is a one-row JVM-local relation
+    (:func:`_local_frame`): it has no lineage, so it is not checkpointed.
+    Each later level's FRONTIER is ``localCheckpoint``-ed (it both
     materializes the level so ``take(1)`` is cheap and cuts lineage);
-    ``visited`` is a lazy union over the already-checkpointed levels, so
-    total materialization is O(|V|) across the whole run — re-checkpointing
-    the accumulated set every level would be O(|V| × depth), quadratic on
-    chain-like graphs. One shuffle per level on the join key — at cluster
-    scale, edges pre-partitioned by ``src`` keep every level co-located:
-    that layout is real, not aspirational — ``GraphStore(buckets=N)`` stores
-    graphs hash-bucketed + sorted by ``src``, and src-keyed joins against
-    the loaded table plan with no edge-side Exchange (tests/test_graph.py).
+    ``visited`` is a lazy union of the seed and the already-checkpointed
+    levels, so total materialization is O(|V|) across the whole run —
+    re-checkpointing the accumulated set every level would be
+    O(|V| × depth), quadratic on chain-like graphs; a compaction every
+    64 levels keeps the union plan bounded. One shuffle per level on the
+    join key — at cluster scale, edges pre-partitioned by ``src`` keep
+    every level co-located: that layout is real, not aspirational —
+    ``GraphStore(buckets=N)`` stores graphs hash-bucketed + sorted by
+    ``src``, and src-keyed joins against the loaded table plan with no
+    edge-side Exchange (tests/test_graph.py).
     """
     spark = edges.sparkSession
     e = edges.select("src", "dst").persist()
     exhausted = True
     try:
-        first = spark.createDataFrame(
-            [(int(start), 0)], "vid BIGINT, level INT"
-        ).localCheckpoint()
-        visited = first  # lazy union of checkpointed per-level frames
+        first = _local_frame(spark, [(int(start), 0)], "vid BIGINT, level INT")
+        visited = first  # lazy union of the seed + checkpointed levels
         frontier = first.select("vid")
         level = 0
         while level < max_iter:
@@ -364,9 +399,7 @@ def dfs_leaves(
                 break
         if not advanced and spawned == 0 and v != start:
             leaves.append(v)
-    return spark.createDataFrame(
-        [(v,) for v in sorted(leaves)], "vid BIGINT"
-    )
+    return _local_frame(spark, [(v,) for v in sorted(leaves)], "vid BIGINT")
 
 
 # ---------------------------------------------------------------------------
@@ -589,7 +622,7 @@ def sssp_weighted(
         .union(edges.select(F.col("dst").alias("vid")))
         # the start vertex is always present (distance 0) even when isolated,
         # matching bfs()'s always-emit-start semantics
-        .union(spark.createDataFrame([(int(start),)], "vid BIGINT"))
+        .union(_local_frame(spark, [(int(start),)], "vid BIGINT"))
         .distinct()
         .withColumn(
             "val",
@@ -650,7 +683,7 @@ def pagerank(
         # empty graph: empty result, matching bfs/connected_components
         # (1.0 / n below would raise ZeroDivisionError on the driver)
         base.unpersist()
-        return spark.createDataFrame([], "vid BIGINT, rank DOUBLE")
+        return _local_frame(spark, [], "vid BIGINT, rank DOUBLE")
     try:
         ranks = base.select(
             "vid", F.lit(1.0 / n).alias("rank")
@@ -714,7 +747,7 @@ def personalized_pagerank(
     v = (
         e.select(F.col("src").alias("vid"))
         .union(e.select(F.col("dst").alias("vid")))
-        .union(spark.createDataFrame([(s,) for s in src_list], "vid BIGINT"))
+        .union(_local_frame(spark, [(s,) for s in src_list], "vid BIGINT"))
         .distinct()
     )
     out_deg = e.groupBy(F.col("src").alias("vid")).agg(
@@ -905,7 +938,7 @@ def topo_levels(edges: DataFrame, max_iter: int = 10_000) -> DataFrame:
         .localCheckpoint()
     )
     spark = edges.sparkSession
-    out = spark.createDataFrame([], "vid BIGINT, topo_level INT")
+    out = _local_frame(spark, [], "vid BIGINT, topo_level INT")
     for level in range(max_iter):
         if verts.isEmpty():
             return out
@@ -1111,7 +1144,7 @@ def strongly_connected_components(
         .localCheckpoint()
     )
     spark = edges.sparkSession
-    out = spark.createDataFrame([], "vid BIGINT, scc BIGINT")
+    out = _local_frame(spark, [], "vid BIGINT, scc BIGINT")
     e = e_all
     for _outer in range(max_iter):
         if stats is not None:
@@ -1308,7 +1341,8 @@ def multi_source_bfs(
     so the traversal state stays O(|V|)."""
     if not sources:
         raise ValueError("multi_source_bfs: need at least one source")
-    first = edges.sparkSession.createDataFrame(
+    first = _local_frame(
+        edges.sparkSession,
         [(int(s), int(s), 0) for s in sorted(set(sources))],
         "vid BIGINT, landmark BIGINT, level INT",
     )
@@ -1351,7 +1385,8 @@ def multi_source_bfs_all(
     back to a per-landmark loop fails loudly."""
     if not sources:
         raise ValueError("multi_source_bfs_all: need at least one source")
-    first = edges.sparkSession.createDataFrame(
+    first = _local_frame(
+        edges.sparkSession,
         [(int(s), int(s), 0) for s in sorted(set(sources))],
         "seed BIGINT, vid BIGINT, level INT",
     )
@@ -1397,9 +1432,9 @@ def temporal_bfs(
     diameter + relabeling rounds, not plain hop diameter)."""
     e = edges.select("src", "dst", F.col("ts").alias("_ets"))
     spark = edges.sparkSession
-    known = spark.createDataFrame(
-        [(int(start),)], "vid BIGINT"
-    ).select("vid", F.lit(None).cast("timestamp").alias("arrival"))
+    known = _local_frame(spark, [(int(start),)], "vid BIGINT").select(
+        "vid", F.lit(None).cast("timestamp").alias("arrival")
+    )
     known = known.localCheckpoint()
     frontier = known
     for _round in range(max_iter):
@@ -1515,8 +1550,8 @@ def shortest_path(
     spark = edges.sparkSession
     e = edges.select("src", "dst").persist()
     try:
-        known = spark.createDataFrame(
-            [(int(start), None)], "vid BIGINT, pred BIGINT"
+        known = _local_frame(
+            spark, [(int(start), None)], "vid BIGINT, pred BIGINT"
         ).localCheckpoint()
         frontier = known.select("vid")
         found = start == end
@@ -1531,7 +1566,7 @@ def shortest_path(
                 .localCheckpoint()
             )
             if nxt.isEmpty():
-                return spark.createDataFrame([], "step INT, vid BIGINT")
+                return _local_frame(spark, [], "step INT, vid BIGINT")
             known = known.unionByName(nxt).localCheckpoint()
             frontier = nxt.select("vid")
             found = not nxt.where(F.col("vid") == end).isEmpty()
@@ -1550,8 +1585,8 @@ def shortest_path(
             cur = int(row["pred"])
             path.append(cur)
         path.reverse()
-        return spark.createDataFrame(
-            [(i, v) for i, v in enumerate(path)], "step INT, vid BIGINT"
+        return _local_frame(
+            spark, [(i, v) for i, v in enumerate(path)], "step INT, vid BIGINT"
         )
     finally:
         e.unpersist()
@@ -2033,7 +2068,8 @@ def diameter_double_sweep(edges: DataFrame) -> DataFrame:
     )
     first = und.agg(F.min("src").alias("m")).first()
     if first["m"] is None:
-        return spark.createDataFrame(
+        return _local_frame(
+            spark,
             [],
             "start_vid BIGINT, peripheral_vid BIGINT, "
             "antipode_vid BIGINT, diameter_lb INT",
@@ -2046,7 +2082,8 @@ def diameter_double_sweep(edges: DataFrame) -> DataFrame:
 
     u, _ = _farthest(bfs(und, start=s0))
     w, ecc = _farthest(bfs(und, start=u))
-    return spark.createDataFrame(
+    return _local_frame(
+        spark,
         [(s0, u, w, ecc)],
         "start_vid BIGINT, peripheral_vid BIGINT, "
         "antipode_vid BIGINT, diameter_lb INT",
@@ -2143,8 +2180,10 @@ def betweenness_centrality(
     # that depth — the same total row count the loop produced over time,
     # materialized per level instead (shuffle/disk-resident, not a
     # per-task buffer).
-    idx_src = spark.createDataFrame(
-        [(i, int(s)) for i, s in enumerate(sources)], "root INT, svid BIGINT"
+    idx_src = _local_frame(
+        spark,
+        [(i, int(s)) for i, s in enumerate(sources)],
+        "root INT, svid BIGINT",
     ).localCheckpoint()
     frontier = idx_src.select(
         "root", F.col("svid").alias("vid"), one.alias("sigma")
@@ -2300,7 +2339,8 @@ def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
             F.struct(F.lit(0).alias("t"), F.col("label").alias("k")),
         ).otherwise(F.struct(F.lit(1).alias("t"), F.col("vid").alias("k")))
         n_comm = verts0.select(eff0.alias("c")).distinct().count()
-        return und.sparkSession.createDataFrame(
+        return _local_frame(
+            und.sparkSession,
             [(int(n_comm), 0, 0.0)],
             "n_communities BIGINT, within_edges BIGINT, q DOUBLE",
         )
@@ -2349,7 +2389,8 @@ def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
         F.sum(F.col("dc") * F.col("dc")).alias("sum_dc2"),
     ).first()
     q = (4.0 * m * within - float(row["sum_dc2"])) / (4.0 * m * m)
-    return und.sparkSession.createDataFrame(
+    return _local_frame(
+        und.sparkSession,
         [(int(row["n_communities"]), int(within), round(q, 6))],
         "n_communities BIGINT, within_edges BIGINT, q DOUBLE",
     )
@@ -2440,7 +2481,7 @@ def greedy_coloring(edges: DataFrame, max_colors: int = 64) -> DataFrame:
     else:
         raise RuntimeError(f"greedy_coloring: exceeded {max_colors} colors")
     if out is None:
-        return spark.createDataFrame([], "vid BIGINT, color INT")
+        return _local_frame(spark, [], "vid BIGINT, color INT")
     return out
 
 
@@ -2660,8 +2701,8 @@ def excluded_vertex_reach(
         root = next((v for v in lo if v != x), None)
         if root is not None:
             first_rows.append((x, root, 0))
-    first = edges.sparkSession.createDataFrame(
-        first_rows, "excl BIGINT, vid BIGINT, level INT"
+    first = _local_frame(
+        edges.sparkSession, first_rows, "excl BIGINT, vid BIGINT, level INT"
     )
 
     def expand(frontier: DataFrame, e: DataFrame) -> DataFrame:
@@ -2787,7 +2828,8 @@ def bridges(
             (min(int(a), int(b)), max(int(a), int(b)))
             for a, b in candidates
         )
-    first = edges.sparkSession.createDataFrame(
+    first = _local_frame(
+        edges.sparkSession,
         [(a, b, a, 0) for a, b in cand],
         "ea BIGINT, eb BIGINT, vid BIGINT, level INT",
     )

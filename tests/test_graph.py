@@ -406,6 +406,68 @@ def test_reference_file_format_roundtrip(spark, tmp_path):
         GraphStore.parse_reference_file("")
 
 
+def test_matrix_door_validates_every_cell(spark, tmp_path):
+    """Engine.add_graph/modify_graph hold the reference-file door's cell
+    contract (GraphStore.validate_matrix_row): exactly n rows of n cells,
+    each 0 or 1. A rejected write leaves the store untouched."""
+    from distributed_graph_database_system_spark.api import Engine
+
+    eng = Engine(spark, str(tmp_path))
+    bad = [
+        [[0, 2], [0, 0]],  # non-0/1 cell
+        [[0, 1], [0]],  # short row
+        [[0, 1, 0], [0, 0, 0]],  # extra column
+        [[0, 1], [0, 0], [0, 0]],  # extra row
+        [[0, 1]],  # missing row
+    ]
+    for matrix in bad:
+        with pytest.raises(ValueError, match="matrix"):
+            eng.add_graph("x", 2, matrix)
+    assert not eng.store.exists("x")
+    eng.add_graph("x", 2, [[0, 1], [0, 0]])
+    for matrix in bad:
+        with pytest.raises(ValueError, match="matrix"):
+            eng.modify_graph("x", 2, matrix)
+    assert eng.bfs_text("x", 1) == "1 2"
+
+
+def test_small_driver_frames_are_local_relations(spark, tmp_path):
+    """The matrix door's edge frame, the BFS seed and the DFS reply are
+    JVM-local relations (LocalTableScan), not Python-RDD frames or seed
+    checkpoints (both plan as Scan ExistingRDD)."""
+    edges = GraphStore(spark, str(tmp_path)).edges_from_matrix(
+        2, [[0, 1], [0, 0]]
+    )
+    seed = bfs(edges, 2)  # vertex 2 has no out-edges: the seed alone
+    leaves = dfs_leaves(edges, 1)
+    for df in (edges, seed, leaves):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    assert [tuple(r) for r in seed.collect()] == [(2, 0)]
+    assert [r.vid for r in leaves.collect()] == [2]
+
+
+def test_plain_graph_load_starts_no_job(spark, tmp_path):
+    """A plain-parquet load declares EDGE_SCHEMA instead of inferring it
+    from the footers, so opening a graph runs no Spark job."""
+    store = GraphStore(spark, str(tmp_path))
+    store.add_matrix("g", 2, [[0, 1], [0, 0]])
+    sc = spark.sparkContext
+    group = "test_plain_graph_load_starts_no_job"
+    sc.setJobGroup(group, "GraphStore.load")
+    try:
+        loaded = store.load("g")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert loaded.schema.simpleString() == "struct<src:bigint,dst:bigint>"
+    assert [tuple(r) for r in loaded.collect()] == [(1, 2)]
+    with pytest.raises(AnalysisException):
+        store.load("missing")
+
+
 def test_sssp_weighted_matches_dijkstra(spark):
     from heapq import heappop, heappush
 
