@@ -18,8 +18,10 @@ Design for scale: graphs are edge-list DataFrames ``(src, dst)``. Traversals
 are set-at-a-time frontier joins (one shuffle per level) with
 ``localCheckpoint()`` per iteration to truncate lineage — the plan stays
 constant-size no matter how many iterations run, which is what keeps the loop
-viable on a 1000-executor cluster. The per-vertex-thread model of the
-reference is replaced wholesale by partition parallelism.
+viable on a 1000-executor cluster. The visit-once walkers (``bfs`` and the
+multi-source BFS family) share one such loop, ``_frontier_traversal``. The
+per-vertex-thread model of the reference is replaced wholesale by partition
+parallelism.
 
 DFS order is inherently sequential, so ``dfs_leaves`` prunes distributively
 (reachability = BFS) and runs the canonical ascending-neighbor DFS on the
@@ -273,65 +275,32 @@ def bfs(edges: DataFrame, start: int, max_iter: int = 10_000) -> DataFrame:
     """Level-synchronous BFS from ``start``; returns ``(vid, level)`` for every
     reachable vertex (start included at level 0), ordered ``level, vid``.
 
-    Each iteration = frontier ⋈ edges (expansion) → anti-join visited (the
-    reference's ``!visited`` check, ``secondaryServer.c:115``) → union into
-    visited. The level-0 seed is a one-row JVM-local relation
-    (:func:`_local_frame`): it has no lineage, so it is not checkpointed.
-    Each later level's FRONTIER is ``localCheckpoint``-ed (it both
-    materializes the level so ``take(1)`` is cheap and cuts lineage);
-    ``visited`` is a lazy union of the seed and the already-checkpointed
-    levels, so total materialization is O(|V|) across the whole run —
-    re-checkpointing the accumulated set every level would be
-    O(|V| × depth), quadratic on chain-like graphs; a compaction every
-    64 levels keeps the union plan bounded. One shuffle per level on the
-    join key — at cluster scale, edges pre-partitioned by ``src`` keep
-    every level co-located: that layout is real, not aspirational —
+    Each level is frontier ⋈ edges → anti-join visited (the reference's
+    ``!visited`` check, ``secondaryServer.c:115``) → union into visited,
+    run by :func:`_frontier_traversal`, which owns the per-level
+    materialization, the stop probe and the cache cleanup. Raises
+    ``RuntimeError`` when the frontier is not exhausted within ``max_iter``
+    levels: a silently truncated reachable set is a WRONG answer for every
+    caller (shortest_path_lengths, dfs_leaves pruning). At cluster scale,
+    edges pre-partitioned by ``src`` keep every level co-located:
     ``GraphStore(buckets=N)`` stores graphs hash-bucketed + sorted by
     ``src``, and src-keyed joins against the loaded table plan with no
     edge-side Exchange (tests/test_graph.py).
     """
-    spark = edges.sparkSession
-    e = edges.select("src", "dst").persist()
-    exhausted = True
-    try:
-        first = _local_frame(spark, [(int(start), 0)], "vid BIGINT, level INT")
-        visited = first  # lazy union of the seed + checkpointed levels
-        frontier = first.select("vid")
-        level = 0
-        while level < max_iter:
-            level += 1
-            nxt = (
-                frontier.join(e, frontier["vid"] == e["src"])
-                .select(e["dst"].alias("vid"))
-                .distinct()
-                .join(visited.select("vid"), "vid", "left_anti")
-                .withColumn("level", F.lit(level))
-                .localCheckpoint()
-            )
-            if not nxt.take(1):
-                exhausted = False
-                break
-            visited = visited.unionByName(nxt)
-            # Compact every 64 levels: keeps the union plan bounded on very
-            # deep (chain-like) graphs while staying O(|V| × depth/64) total
-            # re-materialization instead of the quadratic every-level
-            # compaction.
-            if level % 64 == 0:
-                visited = visited.localCheckpoint()
-            frontier = nxt.select("vid")
-    finally:
-        # finally: a task failure mid-loop must not leak the session-lifetime
-        # CacheManager entry
-        e.unpersist()
-    if exhausted:
-        # a silently truncated reachable set is a WRONG answer for every
-        # caller (shortest_path_lengths, dfs_leaves pruning) — same contract
-        # as pregel's non-convergence raise
-        raise RuntimeError(
-            f"bfs did not exhaust the frontier within max_iter={max_iter} "
-            "levels; raise max_iter (bound: graph eccentricity from start)"
+    first = _local_frame(
+        edges.sparkSession, [(int(start), 0)], "vid BIGINT, level INT"
+    )
+
+    def expand(frontier: DataFrame, e: DataFrame) -> DataFrame:
+        return (
+            frontier.join(e, frontier["vid"] == e["src"])
+            .select(e["dst"].alias("vid"))
+            .distinct()
         )
-    return visited.orderBy("level", "vid")
+
+    return _frontier_traversal(
+        edges, first, ["vid"], ["vid"], expand, "bfs", max_iter
+    ).orderBy("level", "vid")
 
 
 # ---------------------------------------------------------------------------
@@ -1275,22 +1244,28 @@ def _frontier_traversal(
     max_iter: int = 10_000,
     stats: dict | None = None,
 ) -> DataFrame:
-    """Shared level-synchronous traversal discipline for the multi-source
-    walkers: per-level ``expand(frontier, e)`` → anti-join against
-    visited ``dedup_keys`` → localCheckpoint, lazy unionByName with a %64
-    compaction, empty-``take(1)`` stop probe, and the exhausted guard.
-    ``first`` must carry ``row_cols`` plus ``level``; ``expand`` returns
-    next-candidate rows with exactly ``row_cols``. ``dedup_keys`` ⊆
-    ``row_cols`` decides what "already visited" means: ``["vid"]`` gives
-    visit-once-per-vertex (nearest-landmark) semantics, the full row
-    gives per-seed trees. When ``stats`` is passed, the executed
+    """The module's one visit-once level-synchronous loop, run by
+    :func:`bfs` and the multi-source walkers. Per level:
+    ``expand(frontier, e)`` → anti-join against visited ``dedup_keys`` →
+    localCheckpoint (cuts lineage and makes the empty-``take(1)`` stop
+    probe cheap). ``visited`` is a lazy unionByName of ``first`` and the
+    checkpointed levels, compacted every 64 levels: O(|V|) total
+    materialization, where re-checkpointing it every level would be
+    quadratic on chain-like graphs. The persisted edge frame is released
+    in ``finally``; an unexhausted frontier raises rather than truncates.
+    ``first`` is a :func:`_local_frame` seed (no lineage, so never
+    checkpointed) carrying ``row_cols`` plus ``level``; ``expand``
+    returns next-candidate rows with exactly ``row_cols``. ``dedup_keys``
+    ⊆ ``row_cols`` decides what "already visited" means: ``["vid"]``
+    gives visit-once-per-vertex (nearest-landmark) semantics, the full
+    row gives per-seed trees. When ``stats`` is passed, the executed
     join-round count lands in ``stats["rounds"]`` (= max level + 1 final
     empty probe)."""
     e = edges.select("src", "dst").persist()
     exhausted = True
     try:
-        visited = first.localCheckpoint()
-        frontier = visited.select(*row_cols)
+        visited = first
+        frontier = first.select(*row_cols)
         level = 0
         while level < max_iter:
             level += 1
@@ -1315,7 +1290,8 @@ def _frontier_traversal(
     if exhausted:
         raise RuntimeError(
             f"{op_name} did not exhaust the frontier within "
-            f"max_iter={max_iter} levels"
+            f"max_iter={max_iter} levels; raise max_iter (bound: the "
+            "eccentricity of the seeds)"
         )
     return visited
 
@@ -1435,7 +1411,6 @@ def temporal_bfs(
     known = _local_frame(spark, [(int(start),)], "vid BIGINT").select(
         "vid", F.lit(None).cast("timestamp").alias("arrival")
     )
-    known = known.localCheckpoint()
     frontier = known
     for _round in range(max_iter):
         if stats is not None:
@@ -1552,7 +1527,7 @@ def shortest_path(
     try:
         known = _local_frame(
             spark, [(int(start), None)], "vid BIGINT, pred BIGINT"
-        ).localCheckpoint()
+        )
         frontier = known.select("vid")
         found = start == end
         for _ in range(max_iter):
@@ -2184,10 +2159,10 @@ def betweenness_centrality(
         spark,
         [(i, int(s)) for i, s in enumerate(sources)],
         "root INT, svid BIGINT",
-    ).localCheckpoint()
+    )
     frontier = idx_src.select(
         "root", F.col("svid").alias("vid"), one.alias("sigma")
-    ).localCheckpoint()
+    )
     levels = [frontier]
     visited = frontier.select("root", "vid")
     for _ in range(max_iter):

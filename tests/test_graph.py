@@ -432,19 +432,56 @@ def test_matrix_door_validates_every_cell(spark, tmp_path):
 
 
 def test_small_driver_frames_are_local_relations(spark, tmp_path):
-    """The matrix door's edge frame, the BFS seed and the DFS reply are
-    JVM-local relations (LocalTableScan), not Python-RDD frames or seed
+    """The matrix door's edge frame, the traversal seeds and the DFS reply
+    are JVM-local relations (LocalTableScan), not Python-RDD frames or seed
     checkpoints (both plan as Scan ExistingRDD)."""
+    from pyspark.sql import functions as F
+
+    from distributed_graph_database_system_spark.operators.graph import (
+        multi_source_bfs,
+        multi_source_bfs_all,
+        temporal_bfs,
+    )
+
     edges = GraphStore(spark, str(tmp_path)).edges_from_matrix(
         2, [[0, 1], [0, 0]]
     )
-    seed = bfs(edges, 2)  # vertex 2 has no out-edges: the seed alone
+    # vertex 2 has no out-edges: each traversal from it is its seed alone
+    seed = bfs(edges, 2)
+    nearest = multi_source_bfs(edges, [2])
+    trees = multi_source_bfs_all(edges, [2])
+    temporal = temporal_bfs(
+        edges.select("src", "dst", F.lit(0).cast("timestamp").alias("ts")), 2
+    )
     leaves = dfs_leaves(edges, 1)
-    for df in (edges, seed, leaves):
+    for df in (edges, seed, nearest, trees, temporal, leaves):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
     assert [tuple(r) for r in seed.collect()] == [(2, 0)]
+    assert [tuple(r) for r in nearest.collect()] == [(2, 0, 2)]
+    assert [tuple(r) for r in trees.collect()] == [(2, 2, 0)]
+    assert [tuple(r) for r in temporal.collect()] == [(2, None)]
     assert [r.vid for r in leaves.collect()] == [2]
+
+
+def test_bfs_exhaustion_boundary_releases_cache(spark):
+    """G2 from vertex 1 is 4 levels deep: max_iter=5 leaves room for the
+    empty probe level, max_iter=4 raises with the advice to raise it, and
+    the raise leaves no persisted edge frame behind."""
+
+    def cached_rdds():
+        # localCheckpoint registers each checkpointed level as a persistent
+        # RDD too (its blocks live until GC); count only cache entries
+        rdds = spark.sparkContext._jsc.getPersistentRDDs().values()
+        return sum(1 for rdd in rdds if not rdd.isCheckpointed())
+
+    edges = edges_df(spark, G2)
+    before = cached_rdds()
+    with pytest.raises(RuntimeError, match="did not exhaust.*raise max_iter"):
+        bfs(edges, 1, max_iter=4)
+    assert cached_rdds() <= before
+    got = [(r.vid, r.level) for r in bfs(edges, 1, max_iter=5).collect()]
+    assert got == [(1, 0), (2, 1), (3, 1), (4, 2), (5, 3), (6, 4)]
 
 
 def test_plain_graph_load_starts_no_job(spark, tmp_path):
