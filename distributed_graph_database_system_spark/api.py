@@ -3,10 +3,16 @@
 The reference exposes exactly four operations through its REPL client menu
 (``client.c:26-31``): 1 add graph, 2 modify graph, 3 DFS, 4 BFS. ``Engine``
 is the drop-in equivalent: a user of the reference maps each menu choice to
-one method here, with the 30-vertex / 256-byte caps lifted and every
-operation running distributed. The extended analytics (relational, LLM,
-streaming) live in ``queries/`` and ``operators/`` and share the same
-session and graph store.
+one method here, with the 30-vertex / 256-byte caps lifted. The extended
+analytics (relational, LLM, streaming) live in ``queries/`` and
+``operators/`` and share the same session and graph store.
+
+Size rule for DFS and BFS: each call makes one guarded collect of the stored
+edge list, ``limit(G.MAX_COLLECT_EDGES + 1)``, which is also the size probe.
+A graph at or under the cap with no null endpoint is traversed on the driver,
+one Spark job in all: at the reference's 30-vertex scale the distributed
+frontier loop costs Spark jobs, not data. A larger graph runs the
+distributed ``G.bfs`` / ``G.dfs_leaves``.
 """
 
 from __future__ import annotations
@@ -41,9 +47,23 @@ class Engine:
         self.store.modify(name, edges)
         return "File successfully modified"
 
+    def _driver_adjacency(self, edges: DataFrame) -> dict[int, list[int]] | None:
+        """``edges`` as a ``G.driver_adjacency`` when they fit under the cap
+        (read at call time) and no endpoint is null; otherwise ``None``."""
+        cap = G.MAX_COLLECT_EDGES
+        rows = edges.select("src", "dst").limit(cap + 1).collect()
+        if len(rows) > cap or any(src is None or dst is None for src, dst in rows):
+            return None
+        return G.driver_adjacency(rows)
+
     # -- op 3: DFS leaf-set (secondaryServer.c:56-108) ----------------------
     def dfs(self, name: str, start: int) -> DataFrame:
-        return G.dfs_leaves(self.store.load(name), start)
+        edges = self.store.load(name)
+        adj = self._driver_adjacency(edges)
+        if adj is None:
+            return G.dfs_leaves(edges, start)
+        leaves = G.driver_dfs_leaves(adj, start)
+        return G._local_frame(self.spark, [(v,) for v in leaves], "vid BIGINT")
 
     def dfs_text(self, name: str, start: int) -> str:
         """Space-joined 1-indexed leaf list — the reference's wire format
@@ -52,7 +72,13 @@ class Engine:
 
     # -- op 4: BFS level order (secondaryServer.c:111-179) ------------------
     def bfs(self, name: str, start: int) -> DataFrame:
-        return G.bfs(self.store.load(name), start)
+        edges = self.store.load(name)
+        adj = self._driver_adjacency(edges)
+        if adj is None:
+            return G.bfs(edges, start)
+        return G._local_frame(
+            self.spark, G.driver_bfs(adj, start), "vid BIGINT, level INT"
+        )
 
     def bfs_text(self, name: str, start: int) -> str:
         return " ".join(str(r.vid) for r in self.bfs(name, start).collect())

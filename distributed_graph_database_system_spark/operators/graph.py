@@ -27,6 +27,11 @@ DFS order is inherently sequential, so ``dfs_leaves`` prunes distributively
 (reachability = BFS) and runs the canonical ascending-neighbor DFS on the
 driver over the *reachable* subgraph only — bounded work (the reference caps
 graphs at 30 vertices, ``utils.h:26``; we guard with ``max_collect_edges``).
+
+``MAX_COLLECT_EDGES`` is the one driver-collect cap: ``dfs_leaves``' default
+guard, and the size rule of the ``api.Engine`` door, which runs
+``driver_bfs`` / ``driver_dfs_leaves`` when the whole stored graph fits under
+it and the distributed ``bfs`` / ``dfs_leaves`` otherwise.
 """
 
 from __future__ import annotations
@@ -40,6 +45,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 EDGE_SCHEMA = "src BIGINT, dst BIGINT"
+
+# Edges a driver-side traversal may collect (see the module docstring).
+MAX_COLLECT_EDGES = 200_000
 
 
 def _local_frame(
@@ -197,7 +205,9 @@ class GraphStore:
             for j, cell in enumerate(self.validate_matrix_row(matrix[i], n, i))
             if cell
         ]
-        return _local_frame(self.spark, rows, EDGE_SCHEMA)
+        # one partition, so the store holds one file and a guarded
+        # limit().collect() of it is one job
+        return _local_frame(self.spark, rows, EDGE_SCHEMA).coalesce(1)
 
     def add_matrix(self, name: str, n: int, matrix: Sequence[Sequence[int]]) -> None:
         self.add(name, self.edges_from_matrix(n, matrix))
@@ -309,7 +319,7 @@ def bfs(edges: DataFrame, start: int, max_iter: int = 10_000) -> DataFrame:
 
 
 def dfs_leaves(
-    edges: DataFrame, start: int, max_collect_edges: int = 200_000
+    edges: DataFrame, start: int, max_collect_edges: int = MAX_COLLECT_EDGES
 ) -> DataFrame:
     """Canonical DFS leaf-set from ``start`` (deterministic re-spec of the
     reference's race-nondeterministic threaded DFS — see FIXTURES.md §B).
@@ -321,9 +331,10 @@ def dfs_leaves(
 
     Hybrid plan: reachability is computed distributively (BFS), the reachable
     subgraph — typically a tiny fraction of a 100 TB edge set — is collected,
-    and the inherently-sequential DFS runs on the driver. ``max_collect_edges``
-    guards the collect; callers with larger reachable sets should sample or
-    partition by component first.
+    and the inherently-sequential DFS (:func:`driver_dfs_leaves`) runs on the
+    driver. ``max_collect_edges`` (default ``MAX_COLLECT_EDGES``, the cap the
+    ``api.Engine`` door also uses) guards the collect; callers with larger
+    reachable sets should sample or partition by component first.
     """
     spark = edges.sparkSession
     reach = bfs(edges, start).select("vid")
@@ -340,12 +351,35 @@ def dfs_leaves(
             f"reachable subgraph exceeds max_collect_edges="
             f"{max_collect_edges}; refusing driver-side DFS"
         )
-    adj: dict[int, list[int]] = {}
-    for row in rows:
-        adj.setdefault(row["src"], []).append(row["dst"])
-    for nbrs in adj.values():
-        nbrs.sort()
+    leaves = driver_dfs_leaves(driver_adjacency(rows), start)
+    return _local_frame(spark, [(v,) for v in leaves], "vid BIGINT")
 
+
+def driver_adjacency(rows: Sequence[tuple[int, int]]) -> dict[int, list[int]]:
+    """Collected ``(src, dst)`` rows as ``src → ascending distinct dsts``."""
+    adj: dict[int, set[int]] = {}
+    for src, dst in rows:
+        adj.setdefault(src, set()).add(dst)
+    return {v: sorted(nbrs) for v, nbrs in adj.items()}
+
+
+def driver_bfs(adj: dict[int, list[int]], start: int) -> list[tuple[int, int]]:
+    """Level order from ``start`` over a :func:`driver_adjacency`: the rows
+    of :func:`bfs`, ``(vid, level)`` ordered ``level, vid``."""
+    start = int(start)
+    rows, seen, frontier = [(start, 0)], {start}, [start]
+    level = 0
+    while frontier:
+        level += 1
+        frontier = sorted({w for v in frontier for w in adj.get(v, ())} - seen)
+        seen.update(frontier)
+        rows += [(w, level) for w in frontier]
+    return rows
+
+
+def driver_dfs_leaves(adj: dict[int, list[int]], start: int) -> list[int]:
+    """The DFS leaf-set of :func:`dfs_leaves`, ascending, over a
+    :func:`driver_adjacency`."""
     start = int(start)
     visited: set[int] = set()
     leaves: list[int] = []
@@ -368,7 +402,7 @@ def dfs_leaves(
                 break
         if not advanced and spawned == 0 and v != start:
             leaves.append(v)
-    return _local_frame(spark, [(v,) for v in sorted(leaves)], "vid BIGINT")
+    return sorted(leaves)
 
 
 # ---------------------------------------------------------------------------

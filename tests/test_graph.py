@@ -363,10 +363,33 @@ def test_triangle_count(spark):
     assert got == 2
 
 
-def test_engine_facade_mirrors_reference_client_ops(spark, tmp_path):
-    """The four reference client menu ops (client.c:26-31) end-to-end."""
-    from distributed_graph_database_system_spark.api import Engine
+def spy_distributed_traversals(monkeypatch):
+    """Record the name of every ``G.bfs`` / ``G.dfs_leaves`` call (the
+    ``bfs`` call inside ``dfs_leaves`` included)."""
+    from distributed_graph_database_system_spark.operators import graph as G
 
+    calls = []
+    for attr in ("bfs", "dfs_leaves"):
+        def spy(*args, _fn=getattr(G, attr), _attr=attr, **kwargs):
+            calls.append(_attr)
+            return _fn(*args, **kwargs)
+
+        monkeypatch.setattr(G, attr, spy)
+    return calls
+
+
+@pytest.mark.parametrize("cap", [None, 0], ids=["default_cap", "cap0"])
+def test_engine_facade_mirrors_reference_client_ops(spark, tmp_path, monkeypatch, cap):
+    """The four reference client menu ops (client.c:26-31) end-to-end, on
+    both sides of the Engine's collect cap: under the default cap every read
+    is served on the driver, and cap 0 sends it through the distributed
+    ``G.bfs`` / ``G.dfs_leaves``."""
+    from distributed_graph_database_system_spark.api import Engine
+    from distributed_graph_database_system_spark.operators import graph as G
+
+    if cap is not None:
+        monkeypatch.setattr(G, "MAX_COLLECT_EDGES", cap)
+    calls = spy_distributed_traversals(monkeypatch)
     eng = Engine(spark, str(tmp_path))
     n = 5
     matrix = [[0] * n for _ in range(n)]
@@ -382,6 +405,31 @@ def test_engine_facade_mirrors_reference_client_ops(spark, tmp_path):
     assert eng.modify_graph("g", 4, m3) == "File successfully modified"
     assert eng.bfs_text("g", 1) == "1 2 3 4"
     assert eng.dfs_text("g", 1) == "4"
+    assert set(calls) == (set() if cap is None else {"bfs", "dfs_leaves"})
+
+
+def test_engine_small_graph_read_is_one_job(spark, tmp_path):
+    """Under the collect cap, a matrix-door graph is read with one guarded
+    collect: ``bfs_text`` and ``dfs_text`` of a 30-vertex cycle (depth 29,
+    180 jobs on the distributed frontier loop) each start exactly 1 job."""
+    from distributed_graph_database_system_spark.api import Engine
+
+    eng = Engine(spark, str(tmp_path))
+    n = 30
+    eng.add_graph("cycle", n, [[int(j == (i + 1) % n) for j in range(n)] for i in range(n)])
+    sc = spark.sparkContext
+    want = {"bfs_text": " ".join(str(v) for v in range(1, n + 1)), "dfs_text": str(n)}
+    for op, text in want.items():
+        group = f"test_engine_small_graph_read_is_one_job.{op}"
+        sc.setJobGroup(group, op)
+        try:
+            got = getattr(eng, op)("cycle", 1)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert got == text
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1, op
 
 
 def test_reference_file_format_roundtrip(spark, tmp_path):

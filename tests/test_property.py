@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import zlib
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
@@ -43,6 +43,61 @@ def test_traversals_match_python_reference(spark, g):
 
     got_leaves = {r.vid for r in dfs_leaves(df, start).collect()}
     assert got_leaves == py_dfs_leaves(adj, start)
+
+
+@st.composite
+def stored_digraphs(draw):
+    """Edge lists with duplicate edges and self-loops; vertex ``n + 1`` has
+    no edges at all."""
+    n = draw(st.integers(min_value=1, max_value=10))
+    vid = st.integers(min_value=1, max_value=n)
+    edges = draw(st.lists(st.tuples(vid, vid), max_size=30))
+    return n, edges, draw(vid)
+
+
+@given(g=stored_digraphs())
+# levels of several vertices, a duplicate edge and a self-loop on every run
+@example(g=(5, [(1, 4), (1, 3), (1, 2), (1, 2), (2, 2), (3, 5), (2, 5), (4, 1)], 1))
+@SPARK_SETTINGS
+def test_engine_traversals_match_python_reference(spark, tmp_path, monkeypatch, g):
+    """``Engine.bfs_text`` / ``dfs_text`` over graphs written through
+    ``add_graph_edges`` equal the pure-Python references, served on the
+    driver under the default cap and by ``G.bfs`` / ``G.dfs_leaves`` under
+    cap 0."""
+    import uuid
+
+    from distributed_graph_database_system_spark.api import Engine
+    from distributed_graph_database_system_spark.operators import graph as G
+
+    n, edges, start = g
+    eng = Engine(spark, str(tmp_path))
+    name = f"g{uuid.uuid4().hex}"
+    eng.add_graph_edges(name, spark.createDataFrame(edges, "src BIGINT, dst BIGINT"))
+    adj = to_adj(edges)
+    # a distributed read costs seconds: check the edge-free start on the
+    # driver path only
+    for cap, starts in ((G.MAX_COLLECT_EDGES, (start, n + 1)), (0, (start,))):
+        monkeypatch.setattr(G, "MAX_COLLECT_EDGES", cap)
+        for s in starts:
+            want_bfs = " ".join(str(v) for v, _ in py_bfs(adj, s))
+            want_dfs = " ".join(str(v) for v in sorted(py_dfs_leaves(adj, s)))
+            assert eng.bfs_text(name, s) == want_bfs, (cap, s)
+            assert eng.dfs_text(name, s) == want_dfs, (cap, s)
+
+
+def test_engine_bfs_with_null_dst_takes_distributed_path(spark, tmp_path, monkeypatch):
+    """A stored edge with a null endpoint sends ``Engine.bfs`` to ``G.bfs``,
+    whose answer it returns unchanged (the null reads as one more vertex)."""
+    from distributed_graph_database_system_spark.api import Engine
+    from tests.test_graph import spy_distributed_traversals
+
+    calls = spy_distributed_traversals(monkeypatch)
+    eng = Engine(spark, str(tmp_path))
+    eng.add_graph_edges(
+        "g", spark.createDataFrame([(1, 2), (2, None), (1, 3)], "src BIGINT, dst BIGINT")
+    )
+    assert eng.bfs_text("g", 1) == "1 2 3 None"
+    assert calls == ["bfs"]
 
 
 def _py_shingle_hashes(text: str, n: int = 3) -> set[int]:
