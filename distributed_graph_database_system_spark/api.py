@@ -9,10 +9,11 @@ analytics (relational, LLM, streaming) live in ``queries/`` and
 
 Size rule for DFS and BFS: each call makes one guarded collect of the stored
 edge list, ``limit(G.MAX_COLLECT_EDGES + 1)``, which is also the size probe.
-A graph at or under the cap with no null endpoint is traversed on the driver,
-one Spark job in all: at the reference's 30-vertex scale the distributed
-frontier loop costs Spark jobs, not data. A larger graph runs the
-distributed ``G.bfs`` / ``G.dfs_leaves``.
+A graph at or under the cap is traversed on the driver, one Spark job in
+all: at the reference's 30-vertex scale the distributed frontier loop costs
+Spark jobs, not data. A larger graph runs the distributed ``G.bfs`` /
+``G.dfs_leaves``. The store refuses edges with a null endpoint, so every
+collected row is a pair of vertex ids.
 """
 
 from __future__ import annotations
@@ -49,10 +50,10 @@ class Engine:
 
     def _driver_adjacency(self, edges: DataFrame) -> dict[int, list[int]] | None:
         """``edges`` as a ``G.driver_adjacency`` when they fit under the cap
-        (read at call time) and no endpoint is null; otherwise ``None``."""
+        (read at call time); otherwise ``None``."""
         cap = G.MAX_COLLECT_EDGES
         rows = edges.select("src", "dst").limit(cap + 1).collect()
-        if len(rows) > cap or any(src is None or dst is None for src, dst in rows):
+        if len(rows) > cap:
             return None
         return G.driver_adjacency(rows)
 

@@ -18,10 +18,15 @@ Design for scale: graphs are edge-list DataFrames ``(src, dst)``. Traversals
 are set-at-a-time frontier joins (one shuffle per level) with
 ``localCheckpoint()`` per iteration to truncate lineage — the plan stays
 constant-size no matter how many iterations run, which is what keeps the loop
-viable on a 1000-executor cluster. The visit-once walkers (``bfs`` and the
-multi-source BFS family) share one such loop, ``_frontier_traversal``. The
-per-vertex-thread model of the reference is replaced wholesale by partition
-parallelism.
+viable on a 1000-executor cluster. Loops are shared rather than copied:
+the visit-once walkers (``bfs``, the multi-source BFS family, the what-if
+reach of ``excluded_vertex_reach``/``bridges`` and SCC's backward walk) run
+``_frontier_traversal``; fixpoint propagation (hash-min CC, weighted SSSP,
+SCC's coloring) runs ``pregel``; ``pagerank`` and ``personalized_pagerank``
+run ``_pagerank_iterations``. The undirected operators read one edge set,
+``_undirected``, and whole-graph vertex sets come from ``_all_vertices``.
+The per-vertex-thread model of the reference is replaced wholesale by
+partition parallelism.
 
 DFS order is inherently sequential, so ``dfs_leaves`` prunes distributively
 (reachability = BFS) and runs the canonical ascending-neighbor DFS on the
@@ -135,6 +140,14 @@ class GraphStore:
 
     def _write(self, name: str, edges: DataFrame, mode: str) -> None:
         e = self._normalize(edges)
+        # a null endpoint would read back as one more vertex. Probe before
+        # writing, so a rejected add leaves no directory and a rejected
+        # modify keeps the old graph; a frame whose schema rules nulls out
+        # (the matrix door's) needs no probe job.
+        if any(f.nullable for f in e.schema.fields) and not e.where(
+            F.col("src").isNull() | F.col("dst").isNull()
+        ).isEmpty():
+            raise ValueError(f"graph {name!r}: an edge has a null src or dst")
         if self.buckets is None:
             e.write.mode(mode).parquet(self.path(name))
             return
@@ -206,8 +219,11 @@ class GraphStore:
             if cell
         ]
         # one partition, so the store holds one file and a guarded
-        # limit().collect() of it is one job
-        return _local_frame(self.spark, rows, EDGE_SCHEMA).coalesce(1)
+        # limit().collect() of it is one job; NOT NULL, so _write knows
+        # without a job that no endpoint is null
+        return _local_frame(
+            self.spark, rows, "src BIGINT NOT NULL, dst BIGINT NOT NULL"
+        ).coalesce(1)
 
     def add_matrix(self, name: str, n: int, matrix: Sequence[Sequence[int]]) -> None:
         self.add(name, self.edges_from_matrix(n, matrix))
@@ -530,9 +546,7 @@ def connected_components(
     v = (
         vertices.select(F.col("vid"))
         if vertices is not None
-        else edges.select(F.col("src").alias("vid"))
-        .union(edges.select(F.col("dst").alias("vid")))
-        .distinct()
+        else _all_vertices(edges)
     )
     if algorithm == "hashmin":
         sym = edges.select("src", "dst").union(
@@ -663,69 +677,30 @@ def pagerank(
     dataflow, so each iteration is ONE job (the eager localCheckpoint), not
     a job plus a driver-blocking collect. Lineage is cut per iteration; the
     edge list + out-degrees stay cached. Deterministic up to float addition
-    order within the contribution sum (~1e-16)."""
+    order within the contribution sum (~1e-16). The loop is
+    :func:`_pagerank_iterations`, shared with :func:`personalized_pagerank`."""
     spark = edges.sparkSession
     e = edges.select("src", "dst")
-    v = (
-        vertices.select("vid")
-        if vertices is not None
-        else e.select(F.col("src").alias("vid"))
-        .union(e.select(F.col("dst").alias("vid")))
-        .distinct()
-    )
-    out_deg = e.groupBy(F.col("src").alias("vid")).agg(
-        F.count("*").alias("out_degree")
-    )
-    base = (
-        v.join(out_deg, "vid", "left")
-        .select("vid", F.coalesce("out_degree", F.lit(0)).alias("out_degree"))
-        .persist()
-    )
+    v = vertices.select("vid") if vertices is not None else _all_vertices(e)
+    base = _with_out_degree(v, e).persist()
     n = base.count()
     if n == 0:
         # empty graph: empty result, matching bfs/connected_components
         # (1.0 / n below would raise ZeroDivisionError on the driver)
         base.unpersist()
         return _local_frame(spark, [], "vid BIGINT, rank DOUBLE")
-    try:
-        ranks = base.select(
-            "vid", F.lit(1.0 / n).alias("rank")
-        ).localCheckpoint()
-        for _ in range(iterations):
-            with_deg = ranks.join(base, "vid")
-            dangling = with_deg.where(F.col("out_degree") == 0).agg(
-                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dangling")
-            )
-            contribs = (
-                with_deg.join(e, with_deg["vid"] == e["src"])
-                .select(
-                    F.col("dst").alias("vid"),
-                    (F.col("rank") / F.col("out_degree")).alias("c"),
-                )
-                .groupBy("vid")
-                .agg(F.sum("c").alias("c"))
-            )
-            ranks = (
-                base.select("vid")
-                .join(contribs, "vid", "left")
-                .crossJoin(F.broadcast(dangling))
-                .select(
-                    "vid",
-                    (
-                        F.lit((1.0 - damping) / n)
-                        + F.lit(damping)
-                        * (
-                            F.coalesce(F.col("c"), F.lit(0.0))
-                            + F.col("_dangling") / F.lit(float(n))
-                        )
-                    ).alias("rank"),
-                )
-                .localCheckpoint()
-            )
-    finally:
-        # finally: a task failure mid-iteration must not leak the cache entry
-        base.unpersist()
-    return ranks
+    return _pagerank_iterations(
+        e,
+        base,
+        F.lit(1.0 / n),
+        F.lit((1.0 - damping) / n)
+        + F.lit(damping)
+        * (
+            F.coalesce(F.col("c"), F.lit(0.0))
+            + F.col("_dangling") / F.lit(float(n))
+        ),
+        iterations,
+    )
 
 
 def personalized_pagerank(
@@ -737,9 +712,8 @@ def personalized_pagerank(
     """Personalized PageRank: teleport (and dangling) mass returns to the
     ``sources`` set instead of the uniform distribution — rank becomes
     proximity TO the sources, the standard seed-expansion primitive
-    (related-item discovery, local community detection). Same dataflow as
-    :func:`pagerank` (one dst-shuffle per iteration, broadcast one-row
-    dangling aggregate, per-iteration localCheckpoint); the only change is
+    (related-item discovery, local community detection). Same loop as
+    :func:`pagerank` (:func:`_pagerank_iterations`); the only change is
     the restart vector p: 1/|S| on sources, 0 elsewhere, so
     rank' = (1-d)·p + d·(contribs + dangling·p). Ranks sum to 1."""
     spark = edges.sparkSession
@@ -753,21 +727,48 @@ def personalized_pagerank(
         .union(_local_frame(spark, [(s,) for s in src_list], "vid BIGINT"))
         .distinct()
     )
+    p = F.when(F.col("vid").isin(src_list), 1.0 / len(src_list)).otherwise(0.0)
+    base = _with_out_degree(v, e).withColumn("p", p).persist()
+    return _pagerank_iterations(
+        e,
+        base,
+        F.col("p"),
+        F.lit(1.0 - damping) * F.col("p")
+        + F.lit(damping)
+        * (
+            F.coalesce(F.col("c"), F.lit(0.0))
+            + F.col("_dangling") * F.col("p")
+        ),
+        iterations,
+    )
+
+
+def _with_out_degree(v: DataFrame, e: DataFrame) -> DataFrame:
+    """``v``'s ``vid`` with its out-degree in ``e`` (0 for sinks)."""
     out_deg = e.groupBy(F.col("src").alias("vid")).agg(
         F.count("*").alias("out_degree")
     )
-    p = F.when(F.col("vid").isin(src_list), 1.0 / len(src_list)).otherwise(0.0)
-    base = (
-        v.join(out_deg, "vid", "left")
-        .select(
-            "vid",
-            F.coalesce("out_degree", F.lit(0)).alias("out_degree"),
-            p.alias("p"),
-        )
-        .persist()
+    return v.join(out_deg, "vid", "left").select(
+        "vid", F.coalesce("out_degree", F.lit(0)).alias("out_degree")
     )
+
+
+def _pagerank_iterations(
+    e: DataFrame,
+    base: DataFrame,
+    rank0: Column,
+    update: Column,
+    iterations: int,
+) -> DataFrame:
+    """The PageRank loop of :func:`pagerank` and :func:`personalized_pagerank`.
+
+    ``base`` is the persisted ``(vid, out_degree, ...)`` vertex frame; it
+    is released in ``finally``. Ranks start at ``rank0`` and each iteration
+    sets ``rank = update``, an expression over ``base``'s other columns,
+    the summed contribution ``c`` (NULL when none arrived) and the dangling
+    mass ``_dangling``."""
     try:
-        ranks = base.select("vid", F.col("p").alias("rank")).localCheckpoint()
+        ranks = base.select("vid", rank0.alias("rank")).localCheckpoint()
         for _ in range(iterations):
             with_deg = ranks.join(base.select("vid", "out_degree"), "vid")
             dangling = with_deg.where(F.col("out_degree") == 0).agg(
@@ -783,23 +784,14 @@ def personalized_pagerank(
                 .agg(F.sum("c").alias("c"))
             )
             ranks = (
-                base.select("vid", "p")
+                base.drop("out_degree")
                 .join(contribs, "vid", "left")
                 .crossJoin(F.broadcast(dangling))
-                .select(
-                    "vid",
-                    (
-                        F.lit(1.0 - damping) * F.col("p")
-                        + F.lit(damping)
-                        * (
-                            F.coalesce(F.col("c"), F.lit(0.0))
-                            + F.col("_dangling") * F.col("p")
-                        )
-                    ).alias("rank"),
-                )
+                .select("vid", update.alias("rank"))
                 .localCheckpoint()
             )
     finally:
+        # finally: a task failure mid-iteration must not leak the cache entry
         base.unpersist()
     return ranks
 
@@ -823,13 +815,7 @@ def label_propagation(
     Reference parity: no analogue (reference analytics are R3/R4 only);
     north-star "GraphX + Pregel for analytics" extension.
     """
-    e = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    e = _undirected(edges)
     sym = e.unionAll(
         e.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).localCheckpoint()  # (a → neighbor b), both directions
@@ -877,15 +863,7 @@ def k_core(edges: DataFrame, k: int, max_iter: int = 500) -> DataFrame:
     """
     if k < 1:
         raise ValueError(f"k_core: k must be >= 1, got {k}")
-    # undirected simple graph: canonical (min, max) pairs, self-loops out
-    e = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
-    )
+    e = _undirected(edges).localCheckpoint()
     for _ in range(max_iter):
         deg = (
             e.select(F.col("a").alias("v"))
@@ -934,12 +912,7 @@ def topo_levels(edges: DataFrame, max_iter: int = 10_000) -> DataFrame:
     BFS depth.
     """
     e = edges.select("src", "dst").distinct().localCheckpoint()
-    verts = (
-        e.select(F.col("src").alias("vid"))
-        .union(e.select(F.col("dst").alias("vid")))
-        .distinct()
-        .localCheckpoint()
-    )
+    verts = _all_vertices(e).localCheckpoint()
     spark = edges.sparkSession
     out = _local_frame(spark, [], "vid BIGINT, topo_level INT")
     for level in range(max_iter):
@@ -1123,32 +1096,28 @@ def strongly_connected_components(
     fully deterministic regardless of pivots: scc = min member id, and
     xxhash64 is seed-free.
 
-    Iterative DataFrame discipline as everywhere in this module: every
-    loop step localCheckpoints, so plans stay constant-size. Two separate
-    bounds, because they measure different things: ``max_iter`` caps the
-    OUTER trim/color rounds, while ``max_hops`` caps the inner
-    color-propagation and backward-walk loops (bounded by graph diameter
-    — the same regime as bfs's default). When ``stats`` is passed the
-    outer-round count lands in ``stats["outer_rounds"]``.
+    The inner loops are the module's shared ones: COLOR is one max-
+    :func:`pregel` over the priority struct, BACKWARD one
+    :func:`_frontier_traversal` keyed on ``(vid, root)``. Every loop step
+    localCheckpoints, so plans stay constant-size. Two separate bounds,
+    because they measure different things: ``max_iter`` caps the OUTER
+    trim/color rounds, while ``max_hops`` caps each inner loop — pregel's
+    supersteps and the backward walk's levels (bounded by graph diameter
+    — the same regime as bfs's default); either raises ``RuntimeError``
+    when exceeded. When ``stats`` is passed the outer-round count lands
+    in ``stats["outer_rounds"]``.
     """
     # vertices come from the UNFILTERED edge set: a vertex whose only
     # incident edge is a self-loop is a singleton SCC and must appear in
     # the output (trim resolves it once self-loop edges are dropped below)
-    verts = (
-        edges.select(F.col("src").alias("vid"))
-        .union(edges.select(F.col("dst").alias("vid")))
-        .distinct()
-        .localCheckpoint()
-    )
-    e_all = (
+    verts = _all_vertices(edges).localCheckpoint()
+    e = (
         edges.select("src", "dst")
         .where(F.col("src") != F.col("dst"))
         .distinct()
         .localCheckpoint()
     )
-    spark = edges.sparkSession
-    out = _local_frame(spark, [], "vid BIGINT, scc BIGINT")
-    e = e_all
+    out = _local_frame(edges.sparkSession, [], "vid BIGINT, scc BIGINT")
     for _outer in range(max_iter):
         if stats is not None:
             stats["outer_rounds"] = _outer
@@ -1174,12 +1143,7 @@ def strongly_connected_components(
             if trim_round % 64 == 0:
                 out = out.localCheckpoint()
             verts = core.localCheckpoint()
-            e = (
-                e.join(verts.select(F.col("vid").alias("src")), "src", "left_semi")
-                .join(verts.select(F.col("vid").alias("dst")), "dst", "left_semi")
-                .select("src", "dst")
-                .localCheckpoint()
-            )
+            e = _induced(e, verts)
         if verts.isEmpty():
             return out
         # --- color: forward max-PRIORITY propagation to fixpoint -----------
@@ -1193,79 +1157,54 @@ def strongly_connected_components(
             F.xxhash64(F.col("vid"), F.lit(_outer)).alias("p"),
             F.col("vid").alias("cv"),
         )
-        colors = verts.select("vid", prio.alias("color")).localCheckpoint()
-        for _c in range(max_hops):
-            incoming = (
-                e.join(colors.select(F.col("vid").alias("src"), "color"), "src")
-                .groupBy(F.col("dst").alias("vid"))
-                .agg(F.max("color").alias("in_color"))
-            )
-            updated = (
-                colors.join(incoming, "vid", "left")
-                .select(
-                    "vid",
-                    F.greatest(
-                        "color", F.coalesce("in_color", F.col("color"))
-                    ).alias("color"),
-                )
-                .localCheckpoint()
-            )
-            changed = updated.alias("u").join(
-                colors.alias("c"), "vid"
-            ).where(
-                (F.col("u.color.p") != F.col("c.color.p"))
-                | (F.col("u.color.cv") != F.col("c.color.cv"))
-            )
-            colors = updated
-            if changed.isEmpty():
-                break
-        else:
-            raise RuntimeError("scc: coloring did not converge")
+        colors = pregel(
+            verts.select("vid", prio.alias("val")),
+            e,
+            msg=F.col("val"),
+            agg=F.max,
+            update=lambda old, m: F.greatest(old, F.coalesce(m, old)),
+            max_iter=max_hops,
+        )
         # --- backward reachability from roots within color classes --------
         # a root is the vertex whose OWN priority won its class; the class
-        # (and the root's identity) is color.cv from here on
-        roots = colors.where(F.col("vid") == F.col("color.cv"))
-        reached = roots.select(
-            "vid", F.col("color.cv").alias("root")
-        ).localCheckpoint()
-        frontier = reached
-        rev = e.select(F.col("dst").alias("vid"), F.col("src").alias("prev"))
-        for _b in range(max_hops):
-            step = (
-                frontier.join(rev, "vid")
-                .select(F.col("prev").alias("vid"), "root")
-                .join(
-                    colors.select("vid", F.col("color.cv").alias("root")),
-                    ["vid", "root"],
-                    "left_semi",
-                )
-                .join(reached, ["vid", "root"], "left_anti")
+        # (and the root's identity) is val.cv from here on. The seed is a
+        # filter over pregel's checkpointed output, so it needs no
+        # checkpoint of its own.
+        roots = colors.where(F.col("vid") == F.col("val.cv")).select(
+            "vid", F.col("val.cv").alias("root"), F.lit(0).alias("level")
+        )
+        classes = colors.select("vid", F.col("val.cv").alias("root"))
+
+        def expand(frontier: DataFrame, e: DataFrame) -> DataFrame:
+            # one step along a REVERSED edge, kept inside the root's class
+            return (
+                frontier.join(e, frontier["vid"] == e["dst"])
+                .select(e["src"].alias("vid"), "root")
+                .join(classes, ["vid", "root"], "left_semi")
                 .distinct()
-                .localCheckpoint()
             )
-            if step.isEmpty():
-                break
-            # lazy union of checkpointed per-level frames (bfs discipline);
-            # compact periodically so the anti-join's plan stays bounded on
-            # deep components without O(V × depth) rematerialization
-            reached = reached.union(step)
-            if _b % 64 == 63:
-                reached = reached.localCheckpoint()
-            frontier = step
-        else:
-            raise RuntimeError("scc: backward walk did not converge")
+
+        reached = _frontier_traversal(
+            e, roots, ["vid", "root"], ["vid", "root"], expand,
+            "scc backward walk", max_hops,
+        )
         # scc id = MIN member id (deterministic, orientation-free)
         scc_min = reached.groupBy("root").agg(F.min("vid").alias("scc"))
         found = reached.join(scc_min, "root").select("vid", "scc").localCheckpoint()
         out = out.union(found).localCheckpoint()
         verts = verts.join(found.select("vid"), "vid", "left_anti").localCheckpoint()
-        e = (
-            e.join(verts.select(F.col("vid").alias("src")), "src", "left_semi")
-            .join(verts.select(F.col("vid").alias("dst")), "dst", "left_semi")
-            .select("src", "dst")
-            .localCheckpoint()
-        )
+        e = _induced(e, verts)
     raise RuntimeError(f"scc: did not finish within {max_iter} outer rounds")
+
+
+def _induced(e: DataFrame, verts: DataFrame) -> DataFrame:
+    """The ``(src, dst)`` edges of ``e`` with both endpoints in ``verts``."""
+    return (
+        e.join(verts.select(F.col("vid").alias("src")), "src", "left_semi")
+        .join(verts.select(F.col("vid").alias("dst")), "dst", "left_semi")
+        .select("src", "dst")
+        .localCheckpoint()
+    )
 
 
 def _frontier_traversal(
@@ -1279,7 +1218,8 @@ def _frontier_traversal(
     stats: dict | None = None,
 ) -> DataFrame:
     """The module's one visit-once level-synchronous loop, run by
-    :func:`bfs` and the multi-source walkers. Per level:
+    :func:`bfs`, the multi-source walkers and the backward walk of
+    :func:`strongly_connected_components`. Per level:
     ``expand(frontier, e)`` → anti-join against visited ``dedup_keys`` →
     localCheckpoint (cuts lineage and makes the empty-``take(1)`` stop
     probe cheap). ``visited`` is a lazy unionByName of ``first`` and the
@@ -1287,8 +1227,11 @@ def _frontier_traversal(
     materialization, where re-checkpointing it every level would be
     quadratic on chain-like graphs. The persisted edge frame is released
     in ``finally``; an unexhausted frontier raises rather than truncates.
-    ``first`` is a :func:`_local_frame` seed (no lineage, so never
-    checkpointed) carrying ``row_cols`` plus ``level``; ``expand``
+    ``first`` is a shallow frame carrying ``row_cols`` plus ``level``: a
+    :func:`_local_frame` seed, or a projection/filter over an
+    already-checkpointed frame (SCC's roots). It is read again by every
+    level's anti-join and never checkpointed here, so it must not carry
+    lineage worth cutting. ``expand``
     returns next-candidate rows with exactly ``row_cols``. ``dedup_keys``
     ⊆ ``row_cols`` decides what "already visited" means: ``["vid"]``
     gives visit-once-per-vertex (nearest-landmark) semantics, the full
@@ -1629,22 +1572,8 @@ def maximal_independent_set(edges: DataFrame, max_iter: int = 200) -> DataFrame:
     Reference parity: no analogue (reference analytics are R3/R4 only);
     north-star analytics extension.
     """
-    e = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
-    )
-    undecided = (
-        e.select(F.col("a").alias("vid"))
-        .unionAll(e.select(F.col("b").alias("vid")))
-        .unionAll(edges.select(F.col("src").alias("vid")))
-        .unionAll(edges.select(F.col("dst").alias("vid")))
-        .distinct()
-        .localCheckpoint()
-    )
+    e = _undirected(edges).localCheckpoint()
+    undecided = _all_vertices(edges).localCheckpoint()
     mis_parts: list[DataFrame] = []
     for r in range(max_iter):
         if undecided.isEmpty():
@@ -1896,14 +1825,7 @@ def core_decomposition(edges: DataFrame, max_k: int = 1000) -> DataFrame:
 
     Reference parity: no analogue; extends the k_core operator to the
     full decomposition (k_core(k) == coreness ≥ k, asserted in tests)."""
-    e = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
-    )
+    e = _undirected(edges).localCheckpoint()
     alive = (
         e.select(F.col("a").alias("vid"))
         .unionAll(e.select(F.col("b").alias("vid")))
@@ -1965,14 +1887,7 @@ def k_truss(edges: DataFrame, k: int, max_iter: int = 100) -> DataFrame:
     tests/test_graph.py)."""
     if k < 2:
         raise ValueError(f"k_truss: k must be >= 2, got {k}")
-    e = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
-    )
+    e = _undirected(edges).localCheckpoint()
     for _ in range(max_iter):
         if e.isEmpty():
             return e.withColumn("support", F.lit(0).cast("bigint"))
@@ -2143,12 +2058,7 @@ def betweenness_centrality(
             e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
     e = e.distinct().localCheckpoint()
-    verts = (
-        e.select(F.col("src").alias("vid"))
-        .unionAll(e.select(F.col("dst").alias("vid")))
-        .distinct()
-        .localCheckpoint()
-    )
+    verts = _all_vertices(e).localCheckpoint()
     if sources is None:
         # Exact mode collects EVERY vertex id and runs one sweep per
         # vertex — a fixture-scale verification mode. The guard stops an
@@ -2323,26 +2233,14 @@ def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
     as every community-metric convention here. Scale: two broadcast-able
     joins against the label table + integer aggregates; no iteration.
     Reference parity: no analogue; north-star analytics extension."""
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
-    )
+    und = _undirected(edges).localCheckpoint()
     m = und.count()
     if m == 0:
         # even with no surviving edges the vertex census applies (raw-edge
         # universe: self-loop-only vertices count as singletons or under
         # their labels); q is 0 by convention when m = 0
         lab0 = labels.select("vid", "label")
-        verts0 = (
-            edges.select(F.col("src").alias("vid"))
-            .unionAll(edges.select(F.col("dst").alias("vid")))
-            .distinct()
-            .join(lab0, "vid", "left")
-        )
+        verts0 = _all_vertices(edges).join(lab0, "vid", "left")
         eff0 = F.when(
             F.col("label").isNotNull(),
             F.struct(F.lit(0).alias("t"), F.col("label").alias("k")),
@@ -2372,11 +2270,7 @@ def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
     # degree 0 after the strip but still counts toward n_communities (as
     # a singleton or under its label, per the documented convention); its
     # degree term contributes 0 to q either way
-    verts = (
-        edges.select(F.col("src").alias("vid"))
-        .unionAll(edges.select(F.col("dst").alias("vid")))
-        .distinct()
-    )
+    verts = _all_vertices(edges)
     deg_e = (
         und.select(F.col("a").alias("vid"))
         .unionAll(und.select(F.col("b").alias("vid")))
@@ -2422,24 +2316,12 @@ def greedy_coloring(edges: DataFrame, max_colors: int = 64) -> DataFrame:
     cut per round via the MIS operator's own checkpoints plus the
     shrinking edge relation's. Reference parity: no analogue; north-star
     analytics extension."""
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
-    )
+    und = _undirected(edges).localCheckpoint()
     spark = edges.sparkSession
     # vertex universe from the RAW edges: a vertex whose only edges are
     # self-loops must still receive a color (it is isolated after the
     # strip, consistent with maximal_independent_set's documented reading)
-    remaining_v = (
-        edges.select(F.col("src").alias("vid"))
-        .unionAll(edges.select(F.col("dst").alias("vid")))
-        .distinct()
-        .localCheckpoint()
-    )
+    remaining_v = _all_vertices(edges).localCheckpoint()
     remaining_e = und
     out = None
     for color in range(max_colors):
@@ -2520,12 +2402,7 @@ def hits(edges: DataFrame, iterations: int = 8) -> DataFrame:
     # vertex universe from the RAW edges (the greedy_coloring convention):
     # a vertex whose only edges are self-loops still appears, scored 0/0
     # mass share like any other sink/source without the relevant edges
-    verts = (
-        edges.select(F.col("src").alias("vid"))
-        .unionAll(edges.select(F.col("dst").alias("vid")))
-        .distinct()
-        .localCheckpoint()
-    )
+    verts = _all_vertices(edges).localCheckpoint()
     n = verts.count()
     if n == 0:
         return verts.select(
@@ -2608,9 +2485,22 @@ def hits(edges: DataFrame, iterations: int = 8) -> DataFrame:
 
 
 def _all_vertices(edges: DataFrame) -> DataFrame:
+    """Every ``src`` or ``dst`` of ``edges`` once, as ``vid``."""
     return (
         edges.select(F.col("src").alias("vid"))
         .union(edges.select(F.col("dst").alias("vid")))
+        .distinct()
+    )
+
+
+def _undirected(edges: DataFrame) -> DataFrame:
+    """The simple undirected edge set of ``edges``: one ``(a, b)`` row per
+    unordered pair with ``a < b``, self-loops dropped."""
+    return (
+        edges.select(
+            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
+        )
+        .where(F.col("a") != F.col("b"))
         .distinct()
     )
 

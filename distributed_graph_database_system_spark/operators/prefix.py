@@ -29,8 +29,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from distributed_graph_database_system_spark.operators.pin import pin
-
 
 def partitioned_prefix_sums(
     df: DataFrame,
@@ -97,7 +95,7 @@ def partitioned_prefix_sums(
     local = ranged
     for i, v in enumerate(values):
         local = local.withColumn(f"_local_cum_{i}", F.sum(v).over(local_w))
-    local = pin(local)
+    local = local.localCheckpoint()
     # one row per partition → the offsets table is numPartitions rows;
     # the running offset is computed over THAT tiny table (its window is
     # single-partition, over ~n rows — the whole point of the rewrite)

@@ -46,7 +46,7 @@ def get_spark(
         # On a real cluster this would be sized to ~2-3x total cores.
         .config(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            os.environ.get("SPARK_GRAFT_INITIAL_PARTITIONS", str(max(256, n))),
+            str(max(256, n)),
         )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
@@ -66,12 +66,8 @@ def get_spark(
         # constant: the divisor is defaultParallelism, and at real scale
         # (multi-GB inputs) maxPartitionBytes governs instead, where the
         # only effect of a smaller open cost is packing many tiny files
-        # tighter — fewer, fuller tasks. Env-overridable like the other
-        # scale knobs.
-        .config(
-            "spark.sql.files.openCostInBytes",
-            os.environ.get("SPARK_GRAFT_OPEN_COST_BYTES", str(128 * 1024)),
-        )
+        # tighter — fewer, fuller tasks.
+        .config("spark.sql.files.openCostInBytes", str(128 * 1024))
         # Runtime bloom-filter join pruning is ON by default in Spark 4 (the
         # shuffle-join analogue of dynamic partition pruning): a selective
         # filter on one join side injects a bloom filter of its keys into

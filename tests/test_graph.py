@@ -354,6 +354,28 @@ def test_pagerank_dangling_mass_redistributed(spark):
     assert got[4] > got[1]  # rank accumulates down the chain
 
 
+def test_personalized_pagerank_from_every_vertex_is_pagerank(spark):
+    """With every vertex a source the restart vector is uniform, so both
+    callers of the shared PageRank loop must give the same ranks: on G2
+    and on a graph with two dangling vertices (4 and 5)."""
+    from distributed_graph_database_system_spark.operators.graph import (
+        pagerank,
+        personalized_pagerank,
+    )
+
+    for rows in (G2, [(1, 2), (2, 3), (3, 4), (1, 5)]):
+        e = edges_df(spark, rows)
+        verts = sorted({v for edge in rows for v in edge})
+        plain = {r.vid: r.rank for r in pagerank(e, iterations=2).collect()}
+        personal = {
+            r.vid: r.rank
+            for r in personalized_pagerank(e, verts, iterations=2).collect()
+        }
+        assert set(plain) == set(personal) == set(verts)
+        for v in verts:
+            assert abs(plain[v] - personal[v]) < 1e-12
+
+
 def test_triangle_count(spark):
     from distributed_graph_database_system_spark.operators.graph import triangle_count
 
@@ -973,6 +995,59 @@ def test_scc_matches_tarjan_on_random_digraphs(spark, seed):
         ).collect()
     }
     assert got == want
+
+
+def test_scc_max_hops_raises_from_each_inner_loop_and_releases_cache(spark):
+    """``max_hops`` bounds both of SCC's inner loops, and exceeding either
+    raises instead of truncating, with no cache entry left behind.
+
+    - A 6-cycle needs 5 coloring supersteps that change a color plus one
+      that changes none: ``max_hops=5`` raises from pregel, 6 passes.
+    - A hub ``h`` with edges to every chain vertex, on the chain
+      ``c1 -> c2 -> c3 -> c4 -> h``, colors in 2 supersteps when ``h``
+      holds the top round-0 priority, but the backward walk from ``h``
+      needs 4 levels plus the empty probe: ``max_hops=3`` raises from it.
+    """
+    from pyspark.sql import functions as F
+
+    from distributed_graph_database_system_spark.operators.graph import (
+        strongly_connected_components,
+    )
+
+    def cached_rdds():
+        # checkpointed levels are registered too (released by GC); count
+        # only cache entries, as in test_bfs_exhaustion_boundary_releases_cache
+        rdds = spark.sparkContext._jsc.getPersistentRDDs().values()
+        return sum(1 for rdd in rdds if not rdd.isCheckpointed())
+
+    def scc(rows, max_hops):
+        out = strongly_connected_components(
+            _edge_df(spark, rows), max_hops=max_hops
+        )
+        return {(r.vid, r.scc) for r in out.collect()}
+
+    cycle = [(v, v % 6 + 1) for v in range(1, 7)]
+    before = cached_rdds()
+    with pytest.raises(RuntimeError, match="pregel did not converge"):
+        scc(cycle, max_hops=5)
+    assert cached_rdds() <= before
+    assert scc(cycle, max_hops=6) == {(v, 1) for v in range(1, 7)}
+
+    # the hub is the vid with the top (xxhash64(vid, 0), vid) priority,
+    # the order SCC's first coloring round draws
+    hub = (
+        spark.range(1, 6)
+        .orderBy(F.desc(F.xxhash64("id", F.lit(0))), F.desc("id"))
+        .first()
+        .id
+    )
+    chain = [v for v in range(1, 6) if v != hub]
+    rows = [(hub, c) for c in chain]
+    rows += list(zip(chain, chain[1:] + [hub]))
+    with pytest.raises(RuntimeError, match="scc backward walk did not exhaust"):
+        scc(rows, max_hops=3)
+    assert cached_rdds() <= before
+    assert scc(rows, max_hops=5) == {(v, 1) for v in range(1, 6)}
 
 
 # --- multi-source (landmark) BFS --------------------------------------------

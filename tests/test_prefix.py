@@ -165,3 +165,21 @@ def test_decimal_value_schema_preserved(spark):
     for i in range(1, 21):
         run += Decimal(f"{i}.25")
         assert got[i] == run
+
+
+def test_prefix_output_reads_checkpointed_local_sums(spark):
+    """The per-partition running sums feed both the result rows and the
+    offsets table, so they are localCheckpoint-ed once: every consumer
+    reads one placement (an RDD scan in the plan), never a second
+    range-partitioned recomputation whose sampled boundaries could
+    differ."""
+    df = spark.range(40).select(
+        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
+    )
+    out = partitioned_prefix_sum(df, ["k"], "v", "cum", num_partitions=4)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" in plan
+    assert "rangepartitioning" not in plan.lower()
+    assert {r.k: r.cum for r in out.collect()} == {
+        k: k * (k + 1) for k in range(40)
+    }

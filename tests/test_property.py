@@ -4,8 +4,10 @@ example runs real Spark jobs."""
 
 from __future__ import annotations
 
+import os
 import zlib
 
+import pytest
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
@@ -85,19 +87,26 @@ def test_engine_traversals_match_python_reference(spark, tmp_path, monkeypatch, 
             assert eng.dfs_text(name, s) == want_dfs, (cap, s)
 
 
-def test_engine_bfs_with_null_dst_takes_distributed_path(spark, tmp_path, monkeypatch):
-    """A stored edge with a null endpoint sends ``Engine.bfs`` to ``G.bfs``,
-    whose answer it returns unchanged (the null reads as one more vertex)."""
+def test_store_rejects_null_endpoint_and_writes_nothing(spark, tmp_path):
+    """A null ``src`` or ``dst`` is refused at the store's write door,
+    before anything is written: a rejected add leaves no graph directory,
+    a rejected modify keeps the stored graph."""
     from distributed_graph_database_system_spark.api import Engine
-    from tests.test_graph import spy_distributed_traversals
 
-    calls = spy_distributed_traversals(monkeypatch)
     eng = Engine(spark, str(tmp_path))
-    eng.add_graph_edges(
-        "g", spark.createDataFrame([(1, 2), (2, None), (1, 3)], "src BIGINT, dst BIGINT")
+    null_dst = spark.createDataFrame(
+        [(1, 2), (2, None), (1, 3)], "src BIGINT, dst BIGINT"
     )
-    assert eng.bfs_text("g", 1) == "1 2 3 None"
-    assert calls == ["bfs"]
+    with pytest.raises(ValueError, match="null src or dst"):
+        eng.add_graph_edges("g", null_dst)
+    assert not eng.store.exists("g")
+    assert not os.path.exists(tmp_path / "g")
+
+    eng.add_graph("g", 3, [[0, 1, 1], [0, 0, 0], [0, 0, 0]])
+    null_src = null_dst.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    with pytest.raises(ValueError, match="null src or dst"):
+        eng.modify_graph_edges("g", null_src)
+    assert eng.bfs_text("g", 1) == "1 2 3"
 
 
 def _py_shingle_hashes(text: str, n: int = 3) -> set[int]:
