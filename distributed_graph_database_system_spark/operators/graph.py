@@ -21,8 +21,9 @@ constant-size no matter how many iterations run, which is what keeps the loop
 viable on a 1000-executor cluster. Loops are shared rather than copied:
 the visit-once walkers (``bfs``, the multi-source BFS family, the what-if
 reach of ``excluded_vertex_reach``/``bridges`` and SCC's backward walk) run
-``_frontier_traversal``; fixpoint propagation (hash-min CC, weighted SSSP,
-SCC's coloring) runs ``pregel``; ``pagerank`` and ``personalized_pagerank``
+``_frontier_traversal``; fixpoint propagation (weighted SSSP,
+``longest_path_dag``, SCC's coloring) runs ``pregel``, which sends only from
+vertices that changed; ``pagerank`` and ``personalized_pagerank``
 run ``_pagerank_iterations``. The undirected operators read one edge set,
 ``_undirected``, and whole-graph vertex sets come from ``_all_vertices``.
 The per-vertex-thread model of the reference is replaced wholesale by
@@ -436,41 +437,54 @@ def pregel(
 ) -> DataFrame:
     """Minimal Pregel loop over ``vertices (vid, val)`` and ``edges (src, dst)``.
 
-    Per superstep: every vertex sends ``msg`` — an expression over its
-    ``val`` AND any edge columns (e.g. ``weight``) — along each out-edge to
-    ``dst``; incoming messages are combined with ``agg``; each vertex's new
-    ``val`` is ``update(old_val, combined_msg)`` (combined_msg is NULL when
-    no messages arrived). Stops when no ``val`` changed or ``max_iter``
-    supersteps ran. Lineage is cut per superstep.
+    Per superstep: every ACTIVE vertex sends ``msg`` — an expression over
+    its ``val`` AND any edge columns (e.g. ``weight``) — along each
+    out-edge to ``dst``; incoming messages are combined with ``agg``; each
+    vertex's new ``val`` is ``update(old_val, combined_msg)`` (combined_msg
+    is NULL when no messages arrived). A vertex is active when its ``val``
+    changed in the previous superstep (``_changed``, a null-safe compare,
+    so NULL-valued vertices converge too); every vertex is active in the
+    first. Stops when no ``val`` changed or raises after ``max_iter``
+    supersteps. Lineage is cut per superstep.
+
+    Sending only from the active set is GraphX's Pregel rule (Gonzalez et
+    al., OSDI'14). It is exact only for a monotone, idempotent ``agg`` /
+    ``update`` pair (``min``/``least``, ``max``/``greatest``), as every
+    caller here uses: an unchanged vertex's message is then already
+    reflected in its receiver's value.
     """
-    reserved = {"vid", "val"} & set(edges.columns)
+    reserved = {"vid", "val", "_changed"} & set(edges.columns)
     if reserved:
         raise ValueError(
             f"edge columns {sorted(reserved)} collide with pregel's vertex "
             "attributes; rename them before calling pregel"
         )
-    v = vertices.select("vid", "val").localCheckpoint()
+    v = vertices.select(
+        "vid", "val", F.lit(True).alias("_changed")
+    ).localCheckpoint()
     # keep ALL edge columns: message expressions may read edge attributes
     e = edges.persist()
     converged = False
     try:
         for _ in range(max_iter):
             msgs = (
-                v.join(e, v["vid"] == e["src"])
+                v.where("_changed")
+                .join(e, v["vid"] == e["src"])
                 .select(e["dst"].alias("vid"), msg.alias("m"))
                 .groupBy("vid")
                 .agg(agg(F.col("m")).alias("m"))
             )
-            new_v = (
+            new_val = update(F.col("val"), F.col("m"))
+            v = (
                 v.join(msgs, "vid", "left")
                 .select(
-                    "vid", update(F.col("val"), F.col("m")).alias("val")
+                    "vid",
+                    new_val.alias("val"),
+                    (~new_val.eqNullSafe(F.col("val"))).alias("_changed"),
                 )
                 .localCheckpoint()
             )
-            changed = new_v.join(v, ["vid", "val"], "left_anti").take(1)
-            v = new_v
-            if not changed:
+            if not v.where("_changed").take(1):
                 converged = True
                 break
     finally:
@@ -478,12 +492,12 @@ def pregel(
         e.unpersist()
     if not converged:
         # a silently-unconverged fixed point is a WRONG answer for every
-        # current caller (components split, SSSP distances missing)
+        # current caller (SSSP distances missing, SCC colors unsettled)
         raise RuntimeError(
             f"pregel did not converge within max_iter={max_iter} supersteps; "
             "raise max_iter (bound: graph diameter)"
         )
-    return v
+    return v.select("vid", "val")
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -529,42 +543,22 @@ def connected_components(
     edges: DataFrame,
     vertices: DataFrame | None = None,
     max_iter: int = 50,
-    algorithm: str = "star",
 ) -> DataFrame:
     """Weakly connected components: every vertex labeled with the minimum
     vid of its component. Returns ``(vid, comp)``.
 
-    ``algorithm="star"`` (default) is alternating large-star/small-star
-    (Kiveris et al., SoCC'14): converges in O(log n) rounds independent of
-    graph diameter — the variant that survives 100 TB path-shaped or
-    high-diameter graphs, where hash-min's O(diameter) rounds (each a full
-    shuffle) are the bottleneck. ``algorithm="hashmin"`` keeps the simple
-    pregel label-propagation baseline; both produce identical labels
-    (asserted against each other and a driver-side oracle in
-    tests/test_graph.py).
+    Alternating large-star/small-star (Kiveris et al., SoCC'14): converges
+    in O(log n) rounds independent of graph diameter — the variant that
+    survives 100 TB path-shaped or high-diameter graphs, where hash-min
+    label propagation's O(diameter) rounds (each a full shuffle) are the
+    bottleneck. Labels are asserted against a driver-side union-find in
+    tests/test_graph.py, path graphs and isolated vertices included.
     """
     v = (
         vertices.select(F.col("vid"))
         if vertices is not None
         else _all_vertices(edges)
     )
-    if algorithm == "hashmin":
-        sym = edges.select("src", "dst").union(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        init = v.withColumn("val", F.col("vid"))
-        out = pregel(
-            init,
-            sym,
-            msg=F.col("val"),
-            agg=F.min,
-            update=lambda old, m: F.least(old, F.coalesce(m, old)),
-            max_iter=max_iter,
-        )
-        return out.select("vid", F.col("val").alias("comp"))
-    if algorithm != "star":
-        raise ValueError(f"unknown algorithm {algorithm!r}")
-
     e = (
         edges.select("src", "dst")
         .where(F.col("src") != F.col("dst"))
@@ -1118,17 +1112,18 @@ def strongly_connected_components(
         .localCheckpoint()
     )
     out = _local_frame(edges.sparkSession, [], "vid BIGINT, scc BIGINT")
+    # accumulator discipline (the bfs `visited` pattern): out is a lazy
+    # union of already-checkpointed frames (trimmed singletons and found
+    # SCCs alike), compacted every 64 unions — re-checkpointing it per
+    # round would rematerialize every resolved vertex each time, O(V ×
+    # rounds) on chains.
+    unions = 0
     for _outer in range(max_iter):
         if stats is not None:
             stats["outer_rounds"] = _outer
         if verts.isEmpty():
             return out
         # --- trim loop -----------------------------------------------------
-        # accumulator discipline (the bfs `visited` pattern): out is a lazy
-        # union of already-checkpointed per-round frames, compacted every 64
-        # rounds — re-checkpointing it per round would rematerialize every
-        # previously-peeled vertex each iteration, O(V × depth) on chains.
-        trim_round = 0
         while True:
             has_out = e.select(F.col("src").alias("vid")).distinct()
             has_in = e.select(F.col("dst").alias("vid")).distinct()
@@ -1139,8 +1134,8 @@ def strongly_connected_components(
             if trimmed.isEmpty():
                 break
             out = out.union(trimmed.select("vid", F.col("vid").alias("scc")))
-            trim_round += 1
-            if trim_round % 64 == 0:
+            unions += 1
+            if unions % 64 == 0:
                 out = out.localCheckpoint()
             verts = core.localCheckpoint()
             e = _induced(e, verts)
@@ -1191,7 +1186,10 @@ def strongly_connected_components(
         # scc id = MIN member id (deterministic, orientation-free)
         scc_min = reached.groupBy("root").agg(F.min("vid").alias("scc"))
         found = reached.join(scc_min, "root").select("vid", "scc").localCheckpoint()
-        out = out.union(found).localCheckpoint()
+        out = out.union(found)
+        unions += 1
+        if unions % 64 == 0:
+            out = out.localCheckpoint()
         verts = verts.join(found.select("vid"), "vid", "left_anti").localCheckpoint()
         e = _induced(e, verts)
     raise RuntimeError(f"scc: did not finish within {max_iter} outer rounds")
@@ -1378,8 +1376,10 @@ def temporal_bfs(
     usable from an earlier one), so min-labels lose nothing; labels are
     drawn from the finite edge-timestamp set and only decrease, so the
     loop converges. Start's label is NULL-as-minus-infinity (every
-    outgoing edge qualifies). Same per-round localCheckpoint and
-    lazy-union discipline as bfs/sssp. When ``stats`` is passed, the
+    outgoing edge qualifies). Each round checkpoints the improved labels
+    and rebuilds ``known`` (anti-join + union) under a fresh
+    localCheckpoint, so every round rematerializes all labels found so
+    far — unlike bfs's lazy ``visited`` union. When ``stats`` is passed, the
     converged round count is recorded under ``stats["rounds"]`` (the
     scale probe reads it — the label-correcting bound is temporal
     diameter + relabeling rounds, not plain hop diameter)."""
@@ -1436,52 +1436,42 @@ def longest_path_dag(
     vertices) — the critical-path / earliest-completion analytic of
     scheduling, the weighted generalization of :func:`topo_levels`.
 
-    Max-relaxation frontier loop (the sssp_weighted shape with max instead
-    of min): only genuine path values propagate, improvements are
+    One max-:func:`pregel` (the sssp_weighted shape with max instead of
+    min): ``val`` starts at 0.0 on in-degree-0 vertices and NULL elsewhere,
+    and only vertices whose value rose send ``val + weight`` on. Values are
     monotone increasing and drawn from the finite set of path sums, so on
-    a DAG the loop converges within longest-hop-count rounds. Vertices
+    a DAG it converges within longest-hop-count + 1 supersteps. Vertices
     unreachable from any source (including every vertex of a SOURCELESS
-    cycle) are omitted — no label exists for them. A positive-weight
-    cycle REACHABLE from a source makes labels grow forever, and the
-    ``max_iter`` guard raises rather than returning wrong output (use
-    :func:`has_cycle` to pre-check)."""
+    cycle) keep NULL and are omitted — no label exists for them. A
+    positive-weight cycle REACHABLE from a source makes labels grow
+    forever, and the ``max_iter`` guard raises rather than returning wrong
+    output (use :func:`has_cycle` to pre-check)."""
     e = edges.select("src", "dst", "weight")
-    sources = (
-        e.select(F.col("src").alias("vid"))
-        .distinct()
-        .join(e.select(F.col("dst").alias("vid")).distinct(), "vid", "left_anti")
+    ends = e.select(F.col("src").alias("vid"), F.lit(False).alias("_in")).union(
+        e.select(F.col("dst").alias("vid"), F.lit(True).alias("_in"))
     )
-    known = sources.select(
-        "vid", F.lit(0.0).cast("double").alias("dist")
-    ).localCheckpoint()
-    frontier = known
-    for _ in range(max_iter):
-        cand = (
-            frontier.join(e, frontier["vid"] == e["src"])
-            .groupBy(F.col("dst").alias("vid"))
-            .agg(F.max(F.col("dist") + F.col("weight")).alias("dist"))
+    # in-degree 0 ⟺ never a dst: 0.0 there, NULL (not reached) elsewhere
+    init = ends.groupBy("vid").agg(
+        F.when(~F.max("_in"), F.lit(0.0)).alias("val")
+    )
+    try:
+        out = pregel(
+            init,
+            e,
+            msg=F.col("val") + F.col("weight"),
+            agg=F.max,
+            update=F.greatest,
+            max_iter=max_iter,
         )
-        improved = (
-            cand.alias("c")
-            .join(known.alias("k"), "vid", "left")
-            .where(
-                F.col("k.vid").isNull()
-                | (F.col("c.dist") > F.col("k.dist"))
-            )
-            .select("vid", F.col("c.dist").alias("dist"))
-            .localCheckpoint()
-        )
-        if improved.isEmpty():
-            return known.orderBy("dist", "vid")
-        known = (
-            known.join(improved.select("vid"), "vid", "left_anti")
-            .unionByName(improved)
-            .localCheckpoint()
-        )
-        frontier = improved
-    raise RuntimeError(
-        f"longest_path_dag did not converge within max_iter={max_iter} "
-        "rounds — the input likely contains a cycle (see has_cycle)"
+    except RuntimeError as exc:
+        raise RuntimeError(
+            f"longest_path_dag did not converge within max_iter={max_iter} "
+            "rounds — the input likely contains a cycle (see has_cycle)"
+        ) from exc
+    return (
+        out.where(F.col("val").isNotNull())
+        .select("vid", F.col("val").alias("dist"))
+        .orderBy("dist", "vid")
     )
 
 

@@ -912,22 +912,16 @@ def main() -> int:
         f"reached={n_reached}, depth={depth}"
     )
 
-    for algo in ("star", "hashmin"):
-        t0 = time.perf_counter()
-        n_comp = (
-            connected_components(e, algorithm=algo)
-            .select("comp")
-            .distinct()
-            .count()
-        )
-        print(
-            f"cc[{algo}] 1M edges: {round(time.perf_counter() - t0, 2)}s, "
-            f"components={n_comp}"
-        )
+    t0 = time.perf_counter()
+    n_comp = connected_components(e).select("comp").distinct().count()
+    print(
+        f"cc[star] 1M edges: {round(time.perf_counter() - t0, 2)}s, "
+        f"components={n_comp}"
+    )
 
-    # 200k-vertex path graph: diameter 200k. hash-min needs O(diameter)
-    # rounds (raises at max_iter=50); star converges in O(log n) rounds —
-    # this probe is WHY the star variant is the default.
+    # 200k-vertex path graph: diameter 200k. Hash-min label propagation
+    # would need O(diameter) rounds; star converges in O(log n) rounds —
+    # this probe is WHY connected_components runs the star algorithm.
     n_p = 200_000
     path = (
         spark.range(1, n_p)
@@ -938,7 +932,7 @@ def main() -> int:
     p = spark.read.parquet("/tmp/scale_path_edges")
     t0 = time.perf_counter()
     n_comp = (
-        connected_components(p, algorithm="star")
+        connected_components(p)
         .select("comp")
         .distinct()
         .count()

@@ -265,23 +265,19 @@ def test_components_match_union_find(spark, seed):
     assert got == want
 
 
-def test_star_and_hashmin_components_agree(spark):
-    """The O(log n)-round star algorithm and the O(diameter) hash-min
-    baseline must label identically — including on a path graph (worst case
-    for hash-min, the case star CC exists for) and with isolated vertices."""
+def test_star_components_on_path_match_union_find(spark):
+    """The O(log n)-round star algorithm must label like a driver-side
+    union-find on a path graph (the high-diameter case star CC exists
+    for) with isolated vertices."""
     path = [(i, i + 1) for i in range(1, 12)]  # diameter 11
     rows = path + [(20, 21), (21, 20)]
     verts = spark.createDataFrame([(v,) for v in range(1, 25)], "vid BIGINT")
     e = edges_df(spark, rows)
     star = {
         (r.vid, r.comp)
-        for r in connected_components(e, vertices=verts, algorithm="star").collect()
+        for r in connected_components(e, vertices=verts).collect()
     }
-    hashmin = {
-        (r.vid, r.comp)
-        for r in connected_components(e, vertices=verts, algorithm="hashmin").collect()
-    }
-    assert star == hashmin == set(py_components(range(1, 25), rows).items())
+    assert star == set(py_components(range(1, 25), rows).items())
 
 
 def test_pagerank_matches_sequential_reference(spark):
@@ -1226,6 +1222,57 @@ def test_longest_path_dag_golden_and_cycle_guard(spark):
     )
     with pytest.raises(RuntimeError, match="cycle"):
         longest_path_dag(reach_cyc, max_iter=20)
+
+
+def py_longest_path_dag(rows):
+    """Longest source→v path weights by one pass in topological order."""
+    verts = {v for s, d, _ in rows for v in (s, d)}
+    indeg = {v: 0 for v in verts}
+    out = {}
+    for s, d, w in rows:
+        indeg[d] += 1
+        out.setdefault(s, []).append((d, w))
+    dist = {v: 0.0 for v in verts if indeg[v] == 0}
+    ready = sorted(dist)
+    while ready:
+        u = ready.pop()
+        for v, w in out.get(u, ()):
+            dist[v] = max(dist.get(v, float("-inf")), dist[u] + w)
+            indeg[v] -= 1
+            if indeg[v] == 0:
+                ready.append(v)
+    return dist
+
+
+def test_longest_path_dag_matches_topological_reference(spark):
+    """Random DAGs (edges only from lower to higher id, so acyclic) with
+    several sources, duplicate edges and zero weights: every distance
+    equals the topological-order reference exactly."""
+    from distributed_graph_database_system_spark.operators.graph import (
+        longest_path_dag,
+    )
+
+    rng = random.Random(9)
+    for n in (14, 22):
+        rows = [
+            (i, j, rng.choice([0.0, 0.0, round(rng.uniform(0, 9), 3)]))
+            for i in range(1, n + 1)
+            for j in range(i + 1, n + 1)
+            if rng.random() < 0.18
+        ]
+        rows += rng.sample(rows, 4)  # duplicate edges
+        sources = {s for s, _, _ in rows} - {d for _, d, _ in rows}
+        assert len(sources) >= 2
+        want = py_longest_path_dag(rows)
+        got = {
+            r.vid: r.dist
+            for r in longest_path_dag(
+                spark.createDataFrame(
+                    rows, "src BIGINT, dst BIGINT, weight DOUBLE"
+                )
+            ).collect()
+        }
+        assert got == want
 
 
 def test_shortest_path_reconstruction(spark):
