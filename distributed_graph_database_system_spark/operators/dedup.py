@@ -1,14 +1,16 @@
 """Deduplication operators for large-scale text corpora (north-star surface).
 
-All hot paths are JVM-side built-ins (split/transform/xxhash64/array ops) —
-no Python in the per-row path except SimHash, which is an Arrow-batched
-pandas UDF. Every candidate-generation step is *bucketed* (equi-join on a
-band/bucket key) so the plan is a hash join, never an all-pairs product:
-the shape that survives 100 TB.
+Per-row work is either a JVM-side built-in (split/xxhash64/array ops) or an
+Arrow-batched pandas UDF where the JVM form measured slower: the MinHash
+shingle hashes and signatures (``shingle_hash_udf``,
+``minhash_signature_udf``) and SimHash. Every candidate-generation step is
+*bucketed* (equi-join on a band/bucket key) so the plan is a hash join,
+never an all-pairs product: the shape that survives 100 TB.
 
 - exact_dedup_groups: hash-groupBy on md5(text) — one shuffle.
-- minhash_lsh_pairs: shingle → k-minhash signature → banded buckets →
-  bucket equi-join → exact-Jaccard verify on candidates only.
+- minhash_lsh_candidates / minhash_lsh_pairs: shingle → k-minhash signature
+  → banded buckets → bucket equi-join → exact-Jaccard verify on candidates
+  only.
 - simhash64 + simhash_near_pairs: 64-bit SimHash, chunk-banded Hamming join.
 - ngram_jaccard: exact token-shingle Jaccard expression (the verifier).
 """
@@ -345,6 +347,48 @@ def signature_similarity(sig_a: Column, sig_b: Column) -> Column:
     return agree / F.size(sig_a)
 
 
+def minhash_lsh_candidates(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    n: int = 3,
+    k: int = 32,
+    bands: int = 8,
+    seed: int = 42,
+) -> DataFrame:
+    """Pre-verify candidate pairs ``(id_a, id_b)``, id_a < id_b, of banded
+    MinHash-LSH: the distinct doc pairs sharing at least one (band, bucket).
+
+    Bucket rows come from ``lsh_band_rows(lsh_signatures(...))``, the one
+    banding path the streaming index also uses, and carry ONLY ids: the
+    8×-exploded shuffle moves (id, band, bucket) triples, never the
+    shingle arrays, so at corpus scale the join's shuffle volume is
+    O(docs × bands × 24 bytes).
+
+    The self-join is hinted ``shuffle_hash`` so both sides are the same
+    shuffle exchange and the second is a ``ReusedExchange``: the Arrow
+    shingle and signature UDFs run over the corpus once. Unhinted, a band
+    table under the broadcast threshold (1.2 MB at sf0.1) is broadcast, and
+    the broadcast side re-runs both UDFs over every document in a job of
+    its own (perfbench ``dedup_minhash_lsh`` at sf0.1 on 4 cores: median
+    op 2.73 s → 2.16 s, the catalog's schema cache included; BASELINE.md).
+    A band table over the threshold plans a shuffle join either way."""
+    buckets = lsh_band_rows(
+        lsh_signatures(docs, id_col, text_col, n=n, k=k, seed=seed), k, bands
+    )
+    left, right = buckets.alias("l"), buckets.alias("r")
+    return (
+        left.join(
+            right.hint("shuffle_hash"),
+            (F.col("l.band") == F.col("r.band"))
+            & (F.col("l.bucket") == F.col("r.bucket"))
+            & (F.col("l.doc_id") < F.col("r.doc_id")),
+        )
+        .select(F.col("l.doc_id").alias("id_a"), F.col("r.doc_id").alias("id_b"))
+        .dropDuplicates(["id_a", "id_b"])
+    )
+
+
 def minhash_lsh_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -362,39 +406,15 @@ def minhash_lsh_pairs(
     shingle+sign per doc → explode b band buckets → equi-self-join on
     (band, bucket) → exact-Jaccard verify on the candidate pairs only.
     Candidates are bucket-limited, never all-pairs; band count b and rows
-    r=k/b set the S-curve: P(candidate) = 1-(1-s^r)^b."""
-    if k % bands != 0:
-        raise ValueError(f"k={k} must be divisible by bands={bands}")
-    r = k // bands
+    r=k/b set the S-curve: P(candidate) = 1-(1-s^r)^b.
 
-    # Shingle-hash arrays and signatures both come from Arrow-vectorized
-    # UDFs (see shingle_hash_udf for why the JVM higher-order-function path
-    # loses here). CPU fan-out is conditional (_cpu_fanned): only a
-    # severely under-parallel scan pays the payload exchange; at cluster
-    # scale compute-heavy projections need maxPartitionBytes-sized splits.
-    #
-    # Deliberately NO .persist(): columnar-caching nested array batches
-    # costs more than re-deriving them (measured 8 s cache-build vs ~1 s
-    # recompute at 50 k docs), and at corpus scale the cache would dwarf
-    # executor memory. The verify side re-hashes the candidate docs only.
-    sh_udf = shingle_hash_udf(n)
-    hashed = _cpu_fanned(docs, id_col).select(
-        F.col(id_col).alias("_id"), sh_udf(F.col(text_col)).alias("_h")
-    )
-    base = hashed.select(
-        "_id", minhash_signature_udf(k=k, seed=seed)(F.col("_h")).alias("_sig")
-    )
-    # Buckets carry ONLY ids: the 8×-exploded shuffle moves (id, band,
-    # bucket) triples, never the shingle arrays — at corpus scale the
-    # candidate join's shuffle volume is O(docs × bands × 24 bytes).
-    # Banding scheme shared with the incremental index (_band_bucket_structs).
-    buckets = base.select(
-        "_id", F.explode(_band_bucket_structs("_sig", bands, r)).alias("bb")
-    ).select(
-        "_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-    )
-    left = buckets.select("band", "bucket", F.col("_id").alias("id_a"))
-    right = buckets.select("band", "bucket", F.col("_id").alias("id_b"))
+    Shingle-hash arrays and signatures both come from Arrow-vectorized UDFs
+    (see shingle_hash_udf for why the JVM higher-order-function path loses
+    here). Deliberately NO .persist() of them: columnar-caching nested
+    array batches costs more than re-deriving them (measured 8 s
+    cache-build vs ~1 s recompute at 50 k docs), and at corpus scale the
+    cache would dwarf executor memory. The verify side re-hashes the
+    candidate docs only."""
     # cand is consumed by THREE downstream branches (cand_ids union twice,
     # then the verify join) — materialize it once so the expensive bucket
     # self-join and signature UDFs run once (exchange reuse across branches
@@ -406,13 +426,10 @@ def minhash_lsh_pairs(
     # the frame is dropped. The sh frame is deliberately NOT materialized:
     # its nested array column hits the slow columnar cache path, and the
     # two attach joins reuse its shuffle exchange in practice.
-    cand = (
-        left.join(right, ["band", "bucket"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-        .localCheckpoint()
-    )
+    cand = minhash_lsh_candidates(
+        docs, id_col, text_col, n=n, k=k, bands=bands, seed=seed
+    ).localCheckpoint()
+    sh_udf = shingle_hash_udf(n)
     # Shingle-hash arrays re-derived ONLY for docs that appear in a candidate
     # pair (semi-join first): the verify-side UDF touches a tiny fraction of
     # the corpus instead of re-hashing everything for each side of the

@@ -61,15 +61,17 @@ from distributed_graph_database_system_spark.sources.catalog import load_table
 
 def _docs_fanned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents with CPU-bound-projection fan-out: callers here do
-    HEAVY per-doc expression work (per-position md5, 8-gram spans,
-    hashed features), where core-count parallelism beats the cost of
-    exchanging the text payload even when the scan already has some
-    splits — interleaved r15 A/B on text_fingerprint: 0.44 s fanned vs
-    0.87 s on the ~6-split post-rewrite scan. Contrast operators/
-    dedup.py::_cpu_fanned, whose cheaper shingle hashing only fans out
-    under severe scan under-parallelism (its A/B went the other way).
-    At cluster scale the same effect comes from lowering
-    spark.sql.files.maxPartitionBytes for compute-heavy scans."""
+    HEAVY per-doc work (8-gram spans, hashed features, the per-gram md5
+    of rolling_fingerprint), where core-count parallelism should beat the
+    cost of exchanging the text payload even when the scan already has
+    some splits. The one A/B behind this (r15, text_fingerprint: 0.44 s
+    fanned vs 0.87 s on the ~6-split post-rewrite scan) timed the
+    fingerprint's former JVM expression; its C-md5 pandas UDF is about
+    3× cheaper per gram and has not been re-measured fanned vs unfanned.
+    Contrast operators/dedup.py::_cpu_fanned, whose cheaper shingle
+    hashing only fans out under severe scan under-parallelism (its A/B
+    went the other way). At cluster scale the same effect comes from
+    lowering spark.sql.files.maxPartitionBytes for compute-heavy scans."""
     d = load_table(spark, sf_dir, "documents")
     target = spark.sparkContext.defaultParallelism
     return d.repartition(target, "doc_id") if d.rdd.getNumPartitions() < target else d

@@ -14,8 +14,10 @@ table is transparent.
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -61,11 +63,38 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+# Inferred parquet schemas keyed by (abspath, st_mtime_ns, st_size): schema
+# inference runs a footer job on every read, a declared schema starts none
+# (opening all ten sf0.1 tables on 4 cores: 1.01 s inferred vs 0.17 s
+# declared, BASELINE.md). A rewritten file changes its key and is inferred
+# afresh; a directory's mtime does not track rewrites of the files inside
+# it, so only regular files are cached. The confs that change inference are
+# forced by ensure_runtime_confs before every read.
+_SCHEMAS: dict[tuple[str, int, int], StructType] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    try:
+        st = os.stat(path)
+    except OSError:
+        st = None
+    if st is None or not stat.S_ISREG(st.st_mode):
+        # a missing path still raises Spark's own AnalysisException
+        return spark.read.parquet(path)
+    key = (os.path.abspath(path), st.st_mtime_ns, st.st_size)
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = df.schema
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown fixture table {name!r}; one of {TABLES}")
     ensure_runtime_confs(spark)
-    df = spark.read.parquet(table_path(sf_dir, name))
+    df = _read_parquet(spark, table_path(sf_dir, name))
     if name == "events":
         from pyspark.sql import functions as F
         from pyspark.sql.types import LongType, TimestampNTZType

@@ -25,44 +25,12 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F  # noqa: E402
-
 from distributed_graph_database_system_spark.operators.dedup import (  # noqa: E402
-    _band_bucket_structs,
+    minhash_lsh_candidates,
     minhash_lsh_pairs,
-    minhash_signature_udf,
-    shingle_hash_udf,
 )
 from distributed_graph_database_system_spark.session import get_spark  # noqa: E402
 from distributed_graph_database_system_spark.sources.catalog import load_table  # noqa: E402
-
-
-def candidate_count(docs, n=3, k=32, bands=8, seed=42) -> int:
-    """The pre-verify candidate-pair count of minhash_lsh_pairs' bucket
-    self-join (mirrors the operator's cand frame)."""
-    r = k // bands
-    target = docs.sparkSession.sparkContext.defaultParallelism
-    hashed = docs.repartition(target, "doc_id").select(
-        F.col("doc_id").alias("_id"),
-        shingle_hash_udf(n)(F.col("text")).alias("_h"),
-    )
-    base = hashed.select(
-        "_id", minhash_signature_udf(k=k, seed=seed)(F.col("_h")).alias("_sig")
-    )
-    buckets = base.select(
-        "_id", F.explode(_band_bucket_structs("_sig", bands, r)).alias("bb")
-    ).select(
-        "_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-    )
-    left = buckets.select("band", "bucket", F.col("_id").alias("id_a"))
-    right = buckets.select("band", "bucket", F.col("_id").alias("id_b"))
-    return (
-        left.join(right, ["band", "bucket"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-        .count()
-    )
 
 
 def main() -> int:
@@ -71,7 +39,7 @@ def main() -> int:
     for sf_dir in dirs:
         docs = load_table(spark, sf_dir, "documents")
         n_docs = docs.count()
-        cands = candidate_count(docs)
+        cands = minhash_lsh_candidates(docs).count()
         t0 = time.monotonic()
         pairs = minhash_lsh_pairs(docs, threshold=0.7).count()
         wall = time.monotonic() - t0

@@ -505,6 +505,63 @@ def test_ws_tokens_py_matches_jvm_on_hostile_whitespace(spark):
         assert "" not in toks
 
 
+def _hof_fingerprint(col, gram=8):
+    """The former JVM form of ``rolling_fingerprint``, kept as its
+    reference: min md5 over code-point ``substr`` grams, with Spark's own
+    ``length``/``substr``/``md5`` semantics."""
+    c = F.coalesce(col, F.lit(""))
+    positions = F.sequence(F.lit(1), F.greatest(F.length(c) - (gram - 1), F.lit(1)))
+    return F.array_min(
+        F.transform(positions, lambda i: F.md5(c.substr(i, F.lit(gram))))
+    )
+
+
+def test_rolling_fingerprint_matches_jvm_expression(spark, sf_dir):
+    """The C-md5 pandas UDF must equal the Spark expression it replaced on
+    every input shape: NULL, empty, shorter than a gram, exactly one gram,
+    non-ASCII BMP text, astral-plane emoji (one code point, four UTF-8
+    bytes), combining marks, edge whitespace — and on the whole fixture."""
+    from distributed_graph_database_system_spark.operators.textstats import (
+        rolling_fingerprint,
+    )
+
+    hostile = [
+        None,
+        "",
+        "a",
+        "seven c",
+        "exactly8",
+        "exactly8+",
+        "Straße über Ærøskøbing",
+        "日本語のテキストです、長い文",
+        "😀",
+        "😀" * 8,
+        "😀🎉 astral 𝔸𝔹ℂ and ascii tail",
+        "ascii head then 🎉",
+        "ééééé combining",
+        "ạ̈ö",
+        "  leading and trailing  ",
+        "\t\n\r whitespace-edged \n\t",
+        "x" * 200,
+    ]
+    df = spark.createDataFrame(list(enumerate(hostile)), "i INT, text STRING")
+    for gram in (8, 3):
+        rows = df.select(
+            "i",
+            rolling_fingerprint(F.col("text"), gram).alias("got"),
+            _hof_fingerprint(F.col("text"), gram).alias("want"),
+        ).collect()
+        assert len(rows) == len(hostile)
+        for r in rows:
+            assert r.got is not None and r.got == r.want, (gram, hostile[r.i], r.got, r.want)
+
+    from distributed_graph_database_system_spark.sources.catalog import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    fp, ref = rolling_fingerprint(F.col("text")), _hof_fingerprint(F.col("text"))
+    assert docs.where(~fp.eqNullSafe(ref)).count() == 0
+
+
 def test_pinned_operators_partition_invariant(spark):
     """The load-bearing property behind the four pinned VALUES goldens:
     each operator returns IDENTICAL rows regardless of input partitioning

@@ -60,6 +60,40 @@ def test_minhash_python_boundaries_are_arrow_only(plans):
     assert "BatchEvalPython" not in p  # row-at-a-time Python UDF
 
 
+def test_minhash_candidate_job_hashes_the_corpus_once(spark, sf_dir):
+    """The candidate self-join's two sides share one shuffle exchange, so
+    the shingle and signature UDFs run over the corpus once: the final AQE
+    plan of the ``localCheckpoint`` job holds exactly one
+    ``ArrowEvalPython [sig(sh(...))]`` and one ``ReusedExchange``. A
+    broadcast side would re-run both UDFs in a job of its own (the band
+    table is far under the broadcast threshold at this scale)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def latest(k):
+        # the store keeps only the last spark.sql.ui.retainedExecutions, in
+        # execution-id order, so index from its end
+        n = int(store.executionsCount())
+        execs = store.executionsList(max(n - k, 0), min(n, k))
+        return [execs.apply(i) for i in range(execs.size())]
+
+    bus.waitUntilEmpty()
+    before = max((e.executionId() for e in latest(1)), default=-1)
+    all_queries()["dedup_minhash_lsh"].fn(spark, sf_dir).collect()
+    bus.waitUntilEmpty()
+    ran = [e for e in latest(10) if e.executionId() > before]
+    descs = [
+        e.physicalPlanDescription()
+        for e in ran
+        if e.description().startswith("localCheckpoint")
+    ]
+    assert len(descs) == 1, [e.description() for e in ran]
+    final = descs[0].split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    assert final.count("ArrowEvalPython") == 1, final
+    assert final.count("ReusedExchange") == 1, final
+    assert "Arguments: [sig(sh(" in descs[0]
+
+
 def test_sort_topk_is_take_ordered(plans):
     assert "TakeOrderedAndProject" in plans("sort_topk")
 
