@@ -7,19 +7,25 @@ one method here, with the 30-vertex / 256-byte caps lifted. The extended
 analytics (relational, LLM, streaming) live in ``queries/`` and
 ``operators/`` and share the same session and graph store.
 
-Size rule for DFS and BFS: each call makes one guarded collect of the stored
-edge list, ``limit(G.MAX_COLLECT_EDGES + 1)``, which is also the size probe.
-A graph at or under the cap is traversed on the driver, one Spark job in
-all: at the reference's 30-vertex scale the distributed frontier loop costs
-Spark jobs, not data. A larger graph runs the distributed ``G.bfs`` /
-``G.dfs_leaves``. The store refuses edges with a null endpoint, so every
-collected row is a pair of vertex ids.
+Size rule for DFS and BFS: a stored graph of at most ``G.MAX_COLLECT_EDGES``
+edges is traversed on the driver, since at the reference's 30-vertex scale
+the distributed frontier loop costs Spark jobs, not data; a larger graph
+runs the distributed ``G.bfs`` / ``G.dfs_leaves``. The first read of a graph
+makes one guarded collect of its edge list, ``limit(G.MAX_COLLECT_EDGES +
+1)``, which is also the size probe: one Spark job. The engine keeps the
+collected adjacency and serves later reads from it, with no Spark job, for
+as long as the store's file listing of the graph is unchanged; any add or
+modify, from any engine or process, changes that listing. The store refuses
+edges with a null endpoint, so every collected row is a pair of vertex ids.
 """
 
 from __future__ import annotations
 
+import threading
+from collections import OrderedDict
 from collections.abc import Sequence
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 
 from distributed_graph_database_system_spark.operators import graph as G
@@ -29,6 +35,11 @@ class Engine:
     def __init__(self, spark: SparkSession, graph_root: str):
         self.spark = spark
         self.store = G.GraphStore(spark, graph_root)
+        # name -> (store listing, edge count, driver adjacency), least
+        # recently used first; at most G.MAX_COLLECT_EDGES edges in all
+        self._adjacency: OrderedDict[str, tuple[tuple, int, dict]] = OrderedDict()
+        self._adjacency_edges = 0
+        self._adjacency_lock = threading.Lock()
 
     # -- op 1: AddGraph (primaryServer.c:14-80) -----------------------------
     def add_graph(self, name: str, n: int, matrix: Sequence[Sequence[int]]) -> str:
@@ -48,41 +59,77 @@ class Engine:
         self.store.modify(name, edges)
         return "File successfully modified"
 
-    def _driver_adjacency(self, edges: DataFrame) -> dict[int, list[int]] | None:
-        """``edges`` as a ``G.driver_adjacency`` when they fit under the cap
-        (read at call time); otherwise ``None``."""
+    def _small_adjacency(self, name: str) -> dict[int, list[int]] | None:
+        """Graph ``name`` as a ``G.driver_adjacency`` when it has at most
+        ``G.MAX_COLLECT_EDGES`` edges (read at call time); otherwise ``None``.
+
+        The store's listing of ``name`` is taken *before* the guarded
+        collect and kept with its result, so a write that races the collect
+        at worst costs the next read a miss. Nothing is cached at write
+        time: Spark's overwrite is not atomic, and a listing taken after our
+        own write cannot tell our files from a concurrent writer's. A
+        listing that raises (missing graph or root) skips the cache and lets
+        the read raise as it would without one."""
         cap = G.MAX_COLLECT_EDGES
-        rows = edges.select("src", "dst").limit(cap + 1).collect()
+        try:
+            listing = self.store.listing(name)
+        except Py4JJavaError:
+            listing = None
+        with self._adjacency_lock:
+            entry = self._adjacency.pop(name, None)
+            if entry is not None:
+                if entry[0] == listing and entry[1] <= cap:
+                    self._adjacency[name] = entry  # now most recently used
+                    return entry[2]
+                self._adjacency_edges -= entry[1]
+        rows = self.store.load(name).select("src", "dst").limit(cap + 1).collect()
         if len(rows) > cap:
             return None
-        return G.driver_adjacency(rows)
+        adj = G.driver_adjacency(rows)
+        if listing is not None:
+            with self._adjacency_lock:
+                old = self._adjacency.pop(name, None)
+                if old is not None:  # a concurrent read of the same name
+                    self._adjacency_edges -= old[1]
+                self._adjacency[name] = (listing, len(rows), adj)
+                self._adjacency_edges += len(rows)
+                while self._adjacency_edges > cap:
+                    _, evicted = self._adjacency.popitem(last=False)
+                    self._adjacency_edges -= evicted[1]
+        return adj
+
+    def _bfs(self, name: str, start: int) -> list[tuple[int, int]] | DataFrame:
+        adj = self._small_adjacency(name)
+        if adj is None:
+            return G.bfs(self.store.load(name), start)
+        return G.driver_bfs(adj, start)
+
+    def _dfs(self, name: str, start: int) -> list[tuple[int]] | DataFrame:
+        adj = self._small_adjacency(name)
+        if adj is None:
+            return G.dfs_leaves(self.store.load(name), start)
+        return [(v,) for v in G.driver_dfs_leaves(adj, start)]
+
+    def _frame(self, rows: list[tuple] | DataFrame, schema: str) -> DataFrame:
+        if isinstance(rows, DataFrame):
+            return rows
+        return G._local_frame(self.spark, rows, schema)
 
     # -- op 3: DFS leaf-set (secondaryServer.c:56-108) ----------------------
     def dfs(self, name: str, start: int) -> DataFrame:
-        edges = self.store.load(name)
-        adj = self._driver_adjacency(edges)
-        if adj is None:
-            return G.dfs_leaves(edges, start)
-        leaves = G.driver_dfs_leaves(adj, start)
-        return G._local_frame(self.spark, [(v,) for v in leaves], "vid BIGINT")
+        return self._frame(self._dfs(name, start), "vid BIGINT")
 
     def dfs_text(self, name: str, start: int) -> str:
         """Space-joined 1-indexed leaf list — the reference's wire format
         (secondaryServer.c:284-295), without its 256-byte cap."""
-        return " ".join(str(r.vid) for r in self.dfs(name, start).collect())
+        return _vid_text(self._dfs(name, start))
 
     # -- op 4: BFS level order (secondaryServer.c:111-179) ------------------
     def bfs(self, name: str, start: int) -> DataFrame:
-        edges = self.store.load(name)
-        adj = self._driver_adjacency(edges)
-        if adj is None:
-            return G.bfs(edges, start)
-        return G._local_frame(
-            self.spark, G.driver_bfs(adj, start), "vid BIGINT, level INT"
-        )
+        return self._frame(self._bfs(name, start), "vid BIGINT, level INT")
 
     def bfs_text(self, name: str, start: int) -> str:
-        return " ".join(str(r.vid) for r in self.bfs(name, start).collect())
+        return _vid_text(self._bfs(name, start))
 
     # -- beyond the reference: Pregel-style analytics on stored graphs ------
     def degrees(self, name: str) -> DataFrame:
@@ -96,3 +143,10 @@ class Engine:
 
     def shortest_paths(self, name: str, start: int) -> DataFrame:
         return G.shortest_path_lengths(self.store.load(name), start)
+
+
+def _vid_text(rows: list[tuple] | DataFrame) -> str:
+    """The first column (``vid``) of ``rows``, space-joined."""
+    if isinstance(rows, DataFrame):
+        rows = rows.collect()
+    return " ".join(str(r[0]) for r in rows)

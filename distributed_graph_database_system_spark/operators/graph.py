@@ -37,7 +37,8 @@ graphs at 30 vertices, ``utils.h:26``; we guard with ``max_collect_edges``).
 ``MAX_COLLECT_EDGES`` is the one driver-collect cap: ``dfs_leaves``' default
 guard, and the size rule of the ``api.Engine`` door, which runs
 ``driver_bfs`` / ``driver_dfs_leaves`` when the whole stored graph fits under
-it and the distributed ``bfs`` / ``dfs_leaves`` otherwise.
+it and the distributed ``bfs`` / ``dfs_leaves`` otherwise. It also bounds
+the edges of the adjacencies an ``Engine`` keeps between reads.
 """
 
 from __future__ import annotations
@@ -191,17 +192,35 @@ class GraphStore:
         # schema-inference job every plain read would otherwise start
         return self.spark.read.schema(EDGE_SCHEMA).parquet(self.path(name))
 
+    def _hadoop_path(self, name: str):
+        """``name``'s directory as a Hadoop ``(FileSystem, Path)``.
+
+        Hadoop FileSystem API, not os.path: add/modify/load already accept
+        any Hadoop-compatible URI (hdfs://, s3a://, file:), so checks on the
+        directory must resolve through the same filesystem abstraction."""
+        hpath = self.spark._jvm.org.apache.hadoop.fs.Path(self.path(name))
+        return hpath.getFileSystem(self.spark._jsc.hadoopConfiguration()), hpath
+
     def exists(self, name: str) -> bool:
-        # Hadoop FileSystem API, not os.path: add/modify/load already accept
-        # any Hadoop-compatible URI (hdfs://, s3a://, file:), so the existence
-        # check must resolve through the same filesystem abstraction.
         # isDirectory, not exists: a graph is a parquet DIRECTORY; a stray
         # regular file at the path must read as absent (the pre-Hadoop-API
         # os.path.isdir check had the same semantics).
-        jvm = self.spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(self.path(name))
-        fs = hpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
+        fs, hpath = self._hadoop_path(name)
         return bool(fs.isDirectory(hpath))
+
+    def listing(self, name: str) -> tuple[tuple[str, int, int], ...]:
+        """``(file name, length, modification time)`` of every entry in
+        ``name``'s directory, sorted: one ``listStatus`` call. Spark names
+        every part file it writes with a fresh job UUID, so any add or
+        modify, from any session or process, changes the listing. A missing
+        graph or root raises py4j's ``Py4JJavaError``."""
+        fs, hpath = self._hadoop_path(name)
+        return tuple(
+            sorted(
+                (s.getPath().getName(), s.getLen(), s.getModificationTime())
+                for s in fs.listStatus(hpath)
+            )
+        )
 
     # Reference input format: n + dense 0/1 adjacency matrix
     # (``client.c:77-94``). Matrix cell [i][j]==1 ⇔ directed edge i+1 → j+1

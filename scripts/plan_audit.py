@@ -78,17 +78,22 @@ HEADER = [
     "",
     "Auto-generated by `scripts/plan_audit.py` (re-run after plan-affecting",
     "changes). For each headline query: join strategies, scan pushdown, and",
-    "Python-boundary nodes, from `.explain('formatted')` at sf0.01.",
+    "Python-boundary nodes, from `.explain('formatted')` at sf0.01, plus the",
+    "final plan of every SQL execution the query's build runs eagerly (a",
+    "`localCheckpoint` or probe inside `spec.fn`, such as",
+    "`dedup_minhash_lsh`'s candidate self-join), read from the SQL status",
+    "store. Sections after the table's notes are hand-written and kept.",
     "",
     "Reading guide: `BroadcastHashJoin` = small side broadcast (no fact",
     "shuffle); `SortMergeJoin`/`ShuffledHashJoin` = shuffle joins AQE can",
-    "reshape; `PushedFilters`/`ReadSchema` show predicate pushdown and column",
+    "reshape; `ReusedExchange` = one shuffle read by two plan branches;",
+    "`PushedFilters`/`ReadSchema` show predicate pushdown and column",
     "pruning reaching the parquet scan; `ArrowEvalPython`/`FlatMapGroupsInPandas`",
     "= the deliberate Arrow-batched Python boundaries; `TakeOrderedAndProject`",
     "= top-k without a global sort.",
     "",
-    "| query | joins (B=broadcast, SM=sort-merge, NL=nested-loop) | scans w/ pushed filters | pruned scans | python nodes | top-k |",
-    "|---|---|---|---|---|---|",
+    "| query | joins (B=broadcast, SM=sort-merge, SH=shuffled-hash, NL=nested-loop) | scans w/ pushed filters | pruned scans | python nodes | reused exchanges | top-k |",
+    "|---|---|---|---|---|---|---|",
 ]
 
 FOOTER = [
@@ -101,26 +106,50 @@ FOOTER = [
     "- Iterative ops (`graph_bfs_cosupply`) cut lineage per level via localCheckpoint — constant-size plans at any depth.",
     "- `layout_bucketed_join`: both inputs read bucketed (`SelectedBucketsCount` in the scan, no Exchange before the SMJ — asserted in `tests/test_layout.py`); the only shuffle is the final groupBy.",
     "- `layout_partition_pruned`: the date predicate lands in `PartitionFilters` (directory pruning), not a data filter.",
-    "- Node counts are from `.explain('formatted')`, which lists each operator twice (tree + detail section) — compare rows to each other, not to absolute plan sizes.",
+    "- Node counts are from `.explain('formatted')`, which lists each operator twice (tree + detail section), plus the final-plan tree of each eager execution, which lists it once — compare rows to each other, not to absolute plan sizes.",
 ]
+
+
+def _latest_executions(store, k: int) -> list:
+    """The last ``k`` SQL executions in the status store, oldest first. The
+    store keeps only the last ``spark.sql.ui.retainedExecutions``, in id
+    order, so it is read from its end."""
+    n = int(store.executionsCount())
+    if n == 0:
+        return []
+    execs = store.executionsList(max(n - k, 0), min(n, k))
+    return [execs.apply(i) for i in range(execs.size())]
 
 
 def main() -> int:
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     spark = get_spark(cpus=8)
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
     lines = list(HEADER)
     registry = all_queries()
     for name in HEADLINE:
         spec = registry.get(name)
         if spec is None:
             continue
+        bus.waitUntilEmpty()
+        before = max((e.executionId() for e in _latest_executions(store, 1)), default=-1)
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
-            spec.fn(spark, sf).explain("formatted")
-        p = buf.getvalue()
+            df = spec.fn(spark, sf)
+            bus.waitUntilEmpty()
+            eager = [
+                e.physicalPlanDescription().split("== Initial Plan ==")[0]
+                for e in _latest_executions(store, 200)
+                if e.executionId() > before
+            ]
+            df.explain("formatted")
+        p = buf.getvalue() + "".join(eager)
         b = p.count("BroadcastHashJoin")
         sm = p.count("SortMergeJoin")
+        sh = p.count("ShuffledHashJoin")
         nl = p.count("BroadcastNestedLoopJoin")
+        reused = p.count("ReusedExchange")
         pushed = len(
             [m for m in re.findall(r"PushedFilters: \[([^\]]*)\]", p) if m.strip()]
         )
@@ -138,15 +167,18 @@ def main() -> int:
             for x in [
                 f"{b}×B" if b else "",
                 f"{sm}×SM" if sm else "",
+                f"{sh}×SH" if sh else "",
                 f"{nl}×NL" if nl else "",
             ]
             if x
         ) or "—"
         lines.append(
-            f"| {name} | {joins} | {pushed}/{scans} | {pruned} | {py} | {topk} |"
+            f"| {name} | {joins} | {pushed}/{scans} | {pruned} | {py} | {reused} | {topk} |"
         )
+    with open("PLANS.md") as fh:
+        _, sep, sections = fh.read().partition("\n## ")
     with open("PLANS.md", "w") as fh:
-        fh.write("\n".join(lines + FOOTER) + "\n")
+        fh.write("\n".join(lines + FOOTER) + "\n" + ("## " + sections if sep else ""))
     print(f"wrote PLANS.md ({len(lines)} rows)")
     return 0
 

@@ -409,45 +409,156 @@ def test_engine_facade_mirrors_reference_client_ops(spark, tmp_path, monkeypatch
         monkeypatch.setattr(G, "MAX_COLLECT_EDGES", cap)
     calls = spy_distributed_traversals(monkeypatch)
     eng = Engine(spark, str(tmp_path))
-    n = 5
-    matrix = [[0] * n for _ in range(n)]
-    for s, d in G1:
-        matrix[s - 1][d - 1] = 1
-    assert eng.add_graph("g", n, matrix) == "File successfully added"
+    assert eng.add_graph("g", 5, matrix_of(5, G1)) == "File successfully added"
     assert eng.bfs_text("g", 1) == "1 2 3 4 5"
     assert eng.dfs_text("g", 1) == "4 5"
 
-    m3 = [[0] * 4 for _ in range(4)]
-    for s, d in G3:
-        m3[s - 1][d - 1] = 1
-    assert eng.modify_graph("g", 4, m3) == "File successfully modified"
+    assert eng.modify_graph("g", 4, matrix_of(4, G3)) == "File successfully modified"
     assert eng.bfs_text("g", 1) == "1 2 3 4"
     assert eng.dfs_text("g", 1) == "4"
     assert set(calls) == (set() if cap is None else {"bfs", "dfs_leaves"})
 
 
+def matrix_of(n, rows):
+    """The reference's n×n 0/1 adjacency matrix of the edges ``rows``."""
+    matrix = [[0] * n for _ in range(n)]
+    for s, d in rows:
+        matrix[s - 1][d - 1] = 1
+    return matrix
+
+
+def jobs_started(spark, group, fn, *args):
+    """``fn(*args)`` and the number of Spark jobs it started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        got = fn(*args)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return got, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_engine_small_graph_read_is_one_job(spark, tmp_path):
-    """Under the collect cap, a matrix-door graph is read with one guarded
-    collect: ``bfs_text`` and ``dfs_text`` of a 30-vertex cycle (depth 29,
-    180 jobs on the distributed frontier loop) each start exactly 1 job."""
+    """Under the collect cap, the first read of a graph after a write is one
+    guarded collect, one Spark job, even for a 30-vertex cycle (depth 29,
+    180 jobs on the distributed frontier loop); a repeat read of the
+    unchanged graph is served from the engine's adjacency with no job."""
     from distributed_graph_database_system_spark.api import Engine
 
     eng = Engine(spark, str(tmp_path))
     n = 30
-    eng.add_graph("cycle", n, [[int(j == (i + 1) % n) for j in range(n)] for i in range(n)])
-    sc = spark.sparkContext
-    want = {"bfs_text": " ".join(str(v) for v in range(1, n + 1)), "dfs_text": str(n)}
-    for op, text in want.items():
-        group = f"test_engine_small_graph_read_is_one_job.{op}"
-        sc.setJobGroup(group, op)
+    cycle = [(v, v % n + 1) for v in range(1, n + 1)]
+    steps = [
+        ("add", "bfs_text", " ".join(str(v) for v in range(1, n + 1)), 1),
+        ("repeat", "bfs_text", " ".join(str(v) for v in range(1, n + 1)), 0),
+        ("repeat", "dfs_text", str(n), 0),
+        ("modify", "bfs_text", "1 2 3 4", 1),
+        ("repeat", "dfs_text", "4", 0),
+    ]
+    eng.add_graph("cycle", n, matrix_of(n, cycle))
+    for i, (after, op, text, jobs) in enumerate(steps):
+        if after == "modify":
+            eng.modify_graph("cycle", 4, matrix_of(4, G3))
+        group = f"test_engine_small_graph_read_is_one_job.{i}.{op}"
+        assert jobs_started(spark, group, getattr(eng, op), "cycle", 1) == (
+            text,
+            jobs,
+        ), (after, op)
+
+
+def test_engine_read_sees_another_engines_write(spark, tmp_path):
+    """Two engines over one root: a write through one changes the store's
+    listing, so the other's cached adjacency is not served again."""
+    from distributed_graph_database_system_spark.api import Engine
+
+    a, b = Engine(spark, str(tmp_path)), Engine(spark, str(tmp_path))
+    a.add_graph("g", 5, matrix_of(5, G1))
+    assert (a.bfs_text("g", 1), a.dfs_text("g", 1)) == ("1 2 3 4 5", "4 5")
+    b.modify_graph("g", 4, matrix_of(4, G3))
+    assert (a.bfs_text("g", 1), a.dfs_text("g", 1)) == ("1 2 3 4", "4")
+
+
+def test_engine_cache_rechecks_the_cap_on_every_read(spark, tmp_path, monkeypatch):
+    """A cached graph is served only while it fits under the cap read at
+    call time: after the cap drops to 0, the same engine runs the
+    distributed ``G.bfs`` / ``G.dfs_leaves``."""
+    from distributed_graph_database_system_spark.api import Engine
+    from distributed_graph_database_system_spark.operators import graph as G
+
+    calls = spy_distributed_traversals(monkeypatch)
+    eng = Engine(spark, str(tmp_path))
+    eng.add_graph("g", 5, matrix_of(5, G1))
+    assert (eng.bfs_text("g", 1), eng.dfs_text("g", 1)) == ("1 2 3 4 5", "4 5")
+    assert calls == []
+    monkeypatch.setattr(G, "MAX_COLLECT_EDGES", 0)
+    assert (eng.bfs_text("g", 1), eng.dfs_text("g", 1)) == ("1 2 3 4 5", "4 5")
+    assert set(calls) == {"bfs", "dfs_leaves"}
+
+
+def test_engine_read_of_missing_graph_raises(spark, tmp_path):
+    """A missing graph, or a missing store root, raises the read's
+    ``AnalysisException`` and caches nothing."""
+    from distributed_graph_database_system_spark.api import Engine
+
+    for root in (tmp_path, tmp_path / "absent"):
+        eng = Engine(spark, str(root))
+        for op in (eng.bfs_text, eng.dfs_text):
+            with pytest.raises(AnalysisException):
+                op("missing", 1)
+        assert not eng._adjacency
+
+
+def test_engine_cache_holds_at_most_the_cap_of_edges(spark, tmp_path, monkeypatch):
+    """Cached adjacencies hold at most ``MAX_COLLECT_EDGES`` edges in all,
+    evicting the least recently read graph first, also under concurrent
+    reads from more threads than cores."""
+    import sys
+    import threading
+
+    from distributed_graph_database_system_spark.api import Engine
+    from distributed_graph_database_system_spark.operators import graph as G
+
+    cap = 6
+    monkeypatch.setattr(G, "MAX_COLLECT_EDGES", cap)
+    eng = Engine(spark, str(tmp_path))
+    chains = {f"c{k}": [(v, v + 1) for v in range(1, k + 1)] for k in (2, 3, 4)}
+    for name, rows in chains.items():
+        eng.add_graph(name, len(rows) + 1, matrix_of(len(rows) + 1, rows))
+    want = {name: " ".join(map(str, range(1, len(rows) + 2))) for name, rows in chains.items()}
+
+    def cached():
+        counts = [entry[1] for entry in eng._adjacency.values()]
+        assert sum(counts) == eng._adjacency_edges <= cap
+        return list(eng._adjacency)
+
+    for name, cached_after in (("c2", ["c2"]), ("c3", ["c2", "c3"]), ("c4", ["c4"])):
+        assert eng.bfs_text(name, 1) == want[name]
+        assert cached() == cached_after
+
+    errors, names = [], list(chains) * 2
+
+    def reader(i):
         try:
-            got = getattr(eng, op)("cycle", 1)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        assert got == text
-        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1, op
+            for name in names[i:] + names[:i]:
+                assert eng.bfs_text(name, 1) == want[name]
+        except Exception as exc:  # reported by the main thread
+            errors.append(exc)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=reader, args=(i,)) for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    cached()
 
 
 def test_reference_file_format_roundtrip(spark, tmp_path):
