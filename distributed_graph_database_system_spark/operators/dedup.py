@@ -141,15 +141,6 @@ def exact_dedup_groups(
     )
 
 
-def shingle_hashes(shingle_col: Column) -> Column:
-    """Base hashes of the shingles (xxhash64 mod p, in [0, p)). Computed
-    ONCE per document; every minhash permutation is then pure integer
-    arithmetic over this array — string hashing is the expensive part and
-    must not be repeated k times."""
-    p = F.lit(_MERSENNE_31)
-    return F.transform(shingle_col, lambda s: (F.xxhash64(s) % p + p) % p)
-
-
 def _minhash_coeffs(k: int, seed: int) -> list[tuple[int, int]]:
     rnd = _random.Random(seed)
     return [
@@ -294,7 +285,16 @@ def _cpu_fanned(docs: DataFrame, id_col: str) -> DataFrame:
     the banded-candidate pipeline read −15% at sf0.1 (post fixture
     rewrite) and flat at sf10 from dropping it (guide §2.3 — don't
     exchange the heavy column to win parallelism the scan already
-    has)."""
+    has).
+
+    Open defect (ROADMAP carry-forward, fan-out policy):
+    ``getNumPartitions()`` counts byte-range splits, not row groups, so
+    an empty split reads as parallelism. Measured at ``local[4]``: the
+    sf0.1 fixture's ``documents.parquet`` (1 row group, 594 KB) reads as
+    4 partitions holding ``[0, 5000, 0, 0]`` rows, and one task hashes
+    every document; a 16-row-group copy reads ``[1565, 1565, 1565,
+    305]``. With 4 cores the ×8 rule cannot fire at any partition
+    count."""
     target = docs.sparkSession.sparkContext.defaultParallelism
     if docs.rdd.getNumPartitions() * 8 < target:
         return docs.repartition(target, id_col)

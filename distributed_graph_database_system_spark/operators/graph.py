@@ -25,7 +25,13 @@ reach of ``excluded_vertex_reach``/``bridges`` and SCC's backward walk) run
 ``longest_path_dag``, SCC's coloring) runs ``pregel``, which sends only from
 vertices that changed; ``pagerank`` and ``personalized_pagerank``
 run ``_pagerank_iterations``. The undirected operators read one edge set,
-``_undirected``, and whole-graph vertex sets come from ``_all_vertices``.
+``_undirected``, take its degrees from ``_degree`` and remove vertices from
+it with ``_without``; ``triangles`` is the one triangle enumerator
+(``triangle_count``, ``k_truss`` through ``_edge_support`` and the
+clustering queries through ``_vertex_credit``), and ``k_core`` and
+``core_decomposition`` share one
+peeling phase, ``_peel``. Whole-graph vertex sets come from
+``_all_vertices``.
 The per-vertex-thread model of the reference is replaced wholesale by
 partition parallelism.
 
@@ -44,7 +50,9 @@ the edges of the adjacencies an ``Engine`` keeps between reads.
 from __future__ import annotations
 
 import os
+import sys
 from collections.abc import Callable, Sequence
+from functools import reduce
 
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
@@ -859,10 +867,11 @@ def k_core(edges: DataFrame, k: int, max_iter: int = 500) -> DataFrame:
     distributed peeling: each round drops EVERY vertex whose current degree
     is < k (not one at a time), recomputes degrees on the induced subgraph,
     and repeats until stable. Edges are treated as undirected; direction
-    and duplicates are normalized internally.
+    and duplicates are normalized internally. The loop is :func:`_peel`,
+    which :func:`core_decomposition` runs once per threshold.
 
     Scale shape: per round, one degree aggregation + two broadcast-friendly
-    semi-joins (the sub-k vertex set is small after the first rounds); the
+    anti-joins (the sub-k vertex set is small after the first rounds); the
     edge set only shrinks. Lineage is cut per round (localCheckpoint), so
     the plan stays constant-size at any depth. Round count = peeling depth
     of the graph — O(log n)-ish on real graphs, but O(n) on degenerate
@@ -876,30 +885,30 @@ def k_core(edges: DataFrame, k: int, max_iter: int = 500) -> DataFrame:
     """
     if k < 1:
         raise ValueError(f"k_core: k must be >= 1, got {k}")
-    e = _undirected(edges).localCheckpoint()
+    _, deg = _peel(_undirected(edges).localCheckpoint(), k, max_iter)
+    return deg.select("vid", F.col("d").alias("core_degree"))
+
+
+def _peel(
+    e: DataFrame, k: int, max_iter: int
+) -> tuple[DataFrame | None, DataFrame]:
+    """The peeling loop of :func:`k_core` and :func:`core_decomposition`:
+    drop every vertex of degree < ``k`` from the checkpointed ``(a, b)``
+    edge set ``e``, recompute degrees, repeat until no such vertex is left.
+
+    Returns the k-core's edges and its ``(vid, d)`` degrees from the last
+    round, both checkpointed. When the graph peels away completely the
+    edges are None and the degrees are empty, derived from the last
+    round's frame (not a hardcoded BIGINT schema) so the vid type follows
+    the input for INT/STRING vertex ids."""
     for _ in range(max_iter):
-        deg = (
-            e.select(F.col("a").alias("v"))
-            .unionAll(e.select(F.col("b").alias("v")))
-            .groupBy("v")
-            .agg(F.count("*").alias("d"))
-        ).localCheckpoint()
+        deg = _degree(e).localCheckpoint()
         sub_k = deg.where(F.col("d") < k)
         if sub_k.isEmpty():
-            return deg.select(F.col("v").alias("vid"), F.col("d").alias("core_degree"))
-        e = (
-            e.join(sub_k.select(F.col("v").alias("a")), "a", "left_anti")
-            .join(sub_k.select(F.col("v").alias("b")), "b", "left_anti")
-            .select("a", "b")
-            .localCheckpoint()
-        )
+            return e, deg
+        e = _without(e, sub_k).localCheckpoint()
         if e.isEmpty():
-            # graph fully peeled: the k-core is empty. Derive the empty
-            # frame FROM deg (not a hardcoded BIGINT schema) so both return
-            # paths agree on the vid type for INT/STRING vertex ids.
-            return deg.where(F.lit(False)).select(
-                F.col("v").alias("vid"), F.col("d").alias("core_degree")
-            )
+            return None, deg.where(F.lit(False))
     raise RuntimeError(f"k_core: did not stabilize within {max_iter} peeling rounds")
 
 
@@ -967,33 +976,41 @@ def has_cycle(edges: DataFrame, max_iter: int = 10_000) -> bool:
 
 def triangle_count(edges: DataFrame) -> DataFrame:
     """Triangle count of an undirected graph given as canonical edges
-    (src < dst, deduplicated), via DEGREE-ORDERED ORIENTATION: every edge is
-    re-directed from its lower-(degree, vid) endpoint to the higher one, so
-    each vertex's oriented out-degree is O(√m) even on power-law graphs —
-    the wedge join (u→v)⋈(u→w) can't blow up on hub vertices the way a
-    naive (i,j)⋈(j,k) self-join does. Each triangle is counted exactly once:
-    its minimum-(degree, vid) vertex owns the wedge, and the closing edge
-    between the two endpoints is oriented low→high, making the final join
-    an equi-join on the ordered pair. Three shuffles total (degree agg,
-    wedge join, closing-edge join), no per-vertex state."""
-    e = edges.select("src", "dst")
-    deg = (
-        e.select(F.col("src").alias("v"))
-        .unionAll(e.select(F.col("dst").alias("v")))
-        .groupBy("v")
-        .agg(F.count("*").alias("d"))
-    )
+    (src < dst, deduplicated): one row ``n_triangles``, counted over
+    :func:`triangles`."""
+    return triangles(
+        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+    ).agg(F.count("*").alias("n_triangles"))
+
+
+def triangles(und: DataFrame) -> DataFrame:
+    """Every triangle of a canonical undirected edge set exactly once — the
+    package's one triangle enumerator. ``und`` holds ``(a, b)`` rows with
+    a < b, distinct, no self-loops (what :func:`_undirected` builds).
+    Returns ``(u, v, w)``: ``u`` is the triangle's minimum-(degree, vid)
+    corner and ``v``, ``w`` the other two in that order.
+
+    DEGREE-ORDERED ORIENTATION: every edge is re-directed from its
+    lower-(degree, vid) endpoint to the higher one, so each vertex's
+    oriented out-degree is O(√m) even on power-law graphs — the wedge join
+    (u→v)⋈(u→w) can't blow up on hub vertices the way a naive
+    (i,j)⋈(j,k) self-join does. Each triangle appears exactly once: its
+    minimum-key vertex owns the wedge, and the closing edge between the
+    two tips is oriented low→high, making the final join an equi-join on
+    the ordered pair. Three shuffles (degree agg, wedge join, closing-edge
+    join), no per-vertex state."""
+    deg = _degree(und)
     # Attach each endpoint's (degree, vid) orientation key, then direct the
     # edge from the smaller key to the larger. Key comparison uses struct
     # ordering, so ties on degree break deterministically by vid.
     with_keys = (
-        e.join(deg.select(F.col("v").alias("src"), F.col("d").alias("ds")), "src")
-        .join(deg.select(F.col("v").alias("dst"), F.col("d").alias("dd")), "dst")
+        und.join(deg.select(F.col("vid").alias("a"), F.col("d").alias("da")), "a")
+        .join(deg.select(F.col("vid").alias("b"), F.col("d").alias("db")), "b")
         .select(
-            "src",
-            "dst",
-            F.struct(F.col("ds").alias("d"), F.col("src").alias("v")).alias("ks"),
-            F.struct(F.col("dd").alias("d"), F.col("dst").alias("v")).alias("kd"),
+            "a",
+            "b",
+            F.struct(F.col("da").alias("d"), F.col("a").alias("v")).alias("ka"),
+            F.struct(F.col("db").alias("d"), F.col("b").alias("v")).alias("kb"),
         )
     )
     # Materialized once: oriented feeds three consumers (both wedge sides
@@ -1001,23 +1018,48 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     # degree-attach joins re-execute per branch. localCheckpoint over
     # persist for the same CacheManager-leak reason as minhash's candidate
     # pairs (operators/dedup.py).
+    a_low = F.col("ka") < F.col("kb")
     oriented = with_keys.select(
-        F.when(F.col("ks") < F.col("kd"), F.col("src")).otherwise(F.col("dst")).alias("a"),
-        F.when(F.col("ks") < F.col("kd"), F.col("dst")).otherwise(F.col("src")).alias("b"),
-        F.when(F.col("ks") < F.col("kd"), F.col("kd")).otherwise(F.col("ks")).alias("kb"),
+        F.when(a_low, F.col("a")).otherwise(F.col("b")).alias("x"),
+        F.when(a_low, F.col("b")).otherwise(F.col("a")).alias("y"),
+        F.when(a_low, F.col("kb")).otherwise(F.col("ka")).alias("ky"),
     ).localCheckpoint()
     e1, e2 = oriented.alias("e1"), oriented.alias("e2")
-    # Wedges at the minimum-key vertex; endpoints ordered by orientation key
-    # so the closing oriented edge is exactly (x, y).
-    wedges = (
-        e1.join(
-            e2,
-            (F.col("e1.a") == F.col("e2.a")) & (F.col("e1.kb") < F.col("e2.kb")),
-        )
-        .select(F.col("e1.b").alias("x"), F.col("e2.b").alias("y"))
+    # Wedges at the minimum-key vertex; tips ordered by orientation key
+    # so the closing oriented edge is exactly (v, w).
+    wedges = e1.join(
+        e2, (F.col("e1.x") == F.col("e2.x")) & (F.col("e1.ky") < F.col("e2.ky"))
+    ).select(
+        F.col("e1.x").alias("u"), F.col("e1.y").alias("v"), F.col("e2.y").alias("w")
     )
-    closing = oriented.select(F.col("a").alias("x"), F.col("b").alias("y"))
-    return wedges.join(closing, ["x", "y"]).agg(F.count("*").alias("n_triangles"))
+    closing = oriented.select(F.col("x").alias("v"), F.col("y").alias("w"))
+    return wedges.join(closing, ["v", "w"]).select("u", "v", "w")
+
+
+def _edge_support(tri: DataFrame) -> DataFrame:
+    """``(a, b, support)``: each edge (a < b) of the :func:`triangles` rows
+    ``tri`` with the number of triangles through it."""
+    return (
+        reduce(
+            DataFrame.unionAll,
+            [
+                tri.select(F.least(p, q).alias("a"), F.greatest(p, q).alias("b"))
+                for p, q in (("u", "v"), ("u", "w"), ("v", "w"))
+            ],
+        )
+        .groupBy("a", "b")
+        .agg(F.count(F.lit(1)).alias("support"))
+    )
+
+
+def _vertex_credit(tri: DataFrame) -> DataFrame:
+    """``(vid, t)``: each corner of the :func:`triangles` rows ``tri`` with
+    the number of triangles at it."""
+    return (
+        reduce(DataFrame.unionAll, [tri.select(F.col(c).alias("vid")) for c in "uvw"])
+        .groupBy("vid")
+        .agg(F.count(F.lit(1)).alias("t"))
+    )
 
 
 def find_motif(edges: DataFrame, pattern: str) -> DataFrame:
@@ -1588,10 +1630,7 @@ def maximal_independent_set(edges: DataFrame, max_iter: int = 200) -> DataFrame:
         if undecided.isEmpty():
             if not mis_parts:  # empty graph: the MIS is empty
                 return undecided.select("vid")
-            out = mis_parts[0]
-            for p in mis_parts[1:]:
-                out = out.unionAll(p)
-            return out.distinct()
+            return reduce(DataFrame.unionAll, mis_parts).distinct()
         pri = undecided.select(
             "vid", F.xxhash64(F.col("vid"), F.lit(r)).alias("p")
         ).localCheckpoint()
@@ -1622,12 +1661,7 @@ def maximal_independent_set(edges: DataFrame, max_iter: int = 200) -> DataFrame:
         )
         removed = winners.unionAll(dominated).distinct().localCheckpoint()
         undecided = undecided.join(removed, "vid", "left_anti").localCheckpoint()
-        e = (
-            e.join(removed.select(F.col("vid").alias("a")), "a", "left_anti")
-            .join(removed.select(F.col("vid").alias("b")), "b", "left_anti")
-            .select("a", "b")
-            .localCheckpoint()
-        )
+        e = _without(e, removed).localCheckpoint()
     raise RuntimeError(
         f"maximal_independent_set: not converged in {max_iter} rounds"
     )
@@ -1664,17 +1698,19 @@ def random_walks(
     deg = adj.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
     ranked = adj.join(deg, "src").localCheckpoint()
 
-    walks = None
-    for w in range(n_walks):
-        part = seeds.select(
-            F.col("vid").alias("seed"),
-            F.lit(w).alias("walk_id"),
-            F.lit(0).alias("pos"),
-            F.col("vid").alias("v"),
-            F.col("vid").cast("string").alias("path"),
-        )
-        walks = part if walks is None else walks.unionAll(part)
-    frontier = walks.localCheckpoint()
+    frontier = reduce(
+        DataFrame.unionAll,
+        [
+            seeds.select(
+                F.col("vid").alias("seed"),
+                F.lit(w).alias("walk_id"),
+                F.lit(0).alias("pos"),
+                F.col("vid").alias("v"),
+                F.col("vid").cast("string").alias("path"),
+            )
+            for w in range(n_walks)
+        ],
+    ).localCheckpoint()
     done_parts: list[DataFrame] = []
     for _ in range(length):
         pick = F.pmod(
@@ -1722,10 +1758,7 @@ def random_walks(
     done_parts.append(
         frontier.select("seed", "walk_id", F.col("pos").alias("steps"), "path")
     )
-    out = done_parts[0]
-    for p in done_parts[1:]:
-        out = out.unionAll(p)
-    return out
+    return reduce(DataFrame.unionAll, done_parts)
 
 
 def minimum_spanning_forest(
@@ -1813,65 +1846,41 @@ def minimum_spanning_forest(
         )
     if not picked_parts:
         return e.where(F.lit(False)).select("a", "b", "w")
-    out = picked_parts[0]
-    for p in picked_parts[1:]:
-        out = out.unionAll(p)
-    return out.distinct()
+    return reduce(DataFrame.unionAll, picked_parts).distinct()
 
 
 def core_decomposition(edges: DataFrame, max_k: int = 1000) -> DataFrame:
     """Full core decomposition: every vertex labeled with its CORENESS —
     the largest k for which it survives in the k-core. Distributed
-    bin-peeling: phase k removes (repeatedly, until stable) every vertex
-    whose residual degree is < k; vertices removed during phase k have
-    coreness k−1. Each inner round is the same degree-aggregate +
-    anti-join as ``k_core``; the edge set only shrinks, and total phase
-    count is the graph's degeneracy + 1 (small for real graphs — web/
-    social graphs have degeneracy in the hundreds at billions of edges,
-    which is why peeling is THE scalable coreness algorithm). Lineage cut
-    per round. Returns ``(vid, coreness)`` for every vertex incident to
-    an edge.
+    bin-peeling: phase k runs :func:`k_core`'s loop (:func:`_peel`) at
+    threshold k on the (k−1)-core's edges; the vertices that phase peels
+    have coreness k−1, and the k-core it leaves feeds phase k+1. The edge
+    set only shrinks, and total phase count is the graph's degeneracy + 1
+    (small for real graphs — web/social graphs have degeneracy in the
+    hundreds at billions of edges, which is why peeling is THE scalable
+    coreness algorithm). Lineage cut per round. Returns ``(vid,
+    coreness)`` for every vertex incident to an edge; an edgeless graph
+    gives an empty frame.
 
     Reference parity: no analogue; extends the k_core operator to the
     full decomposition (k_core(k) == coreness ≥ k, asserted in tests)."""
     e = _undirected(edges).localCheckpoint()
-    alive = (
-        e.select(F.col("a").alias("vid"))
-        .unionAll(e.select(F.col("b").alias("vid")))
-        .distinct()
-        .localCheckpoint()
-    )
+    if e.isEmpty():
+        return e.select(F.col("a").alias("vid"), F.lit(0).alias("coreness"))
+    alive = _degree(e).select("vid")
     out_parts: list[DataFrame] = []
     for k in range(2, max_k + 2):
-        # peel at threshold k until stable
-        while True:
-            deg = (
-                e.select(F.col("a").alias("vid"))
-                .unionAll(e.select(F.col("b").alias("vid")))
-                .groupBy("vid")
-                .agg(F.count(F.lit(1)).alias("d"))
+        # each peeling round drops at least one vertex, so a phase ends
+        # within |V| rounds: the phase needs no round bound of its own
+        e, core = _peel(e, k, sys.maxsize)
+        out_parts.append(
+            alive.join(core, "vid", "left_anti").select(
+                "vid", F.lit(k - 1).alias("coreness")
             )
-            # vertices alive but with zero residual degree also fall
-            drop = alive.join(
-                deg.where(F.col("d") >= k), "vid", "left_anti"
-            ).localCheckpoint()
-            if drop.isEmpty():
-                break
-            out_parts.append(
-                drop.select("vid", F.lit(k - 1).alias("coreness"))
-            )
-            alive = alive.join(drop, "vid", "left_anti").localCheckpoint()
-            e = (
-                e.join(drop.select(F.col("vid").alias("a")), "a", "left_anti")
-                .join(drop.select(F.col("vid").alias("b")), "b", "left_anti")
-                .select("a", "b")
-                .localCheckpoint()
-            )
-        if alive.isEmpty():
-            out = out_parts[0]
-            for p in out_parts[1:]:
-                out = out.unionAll(p)
-            return out
+        )
+        if e is None:
+            return reduce(DataFrame.unionAll, out_parts)
+        alive = core.select("vid")
     raise RuntimeError(f"core_decomposition: degeneracy exceeds max_k={max_k}")
 
 
@@ -1879,17 +1888,13 @@ def k_truss(edges: DataFrame, k: int, max_iter: int = 100) -> DataFrame:
     """The k-truss: the maximal subgraph where EVERY edge participates in
     ≥ k−2 triangles (a cohesion notion strictly between k-core and clique
     — the standard community-core extractor). Distributed peeling on
-    EDGES: per round, count each surviving edge's triangle support with
-    a degree-ordered wedge join — every edge is oriented from its
-    lower-``(degree, id)`` endpoint to the higher, wedges form only at the
-    LOW end, and a triangle closes iff the oriented edge between the two
-    wedge tips exists. Wedge fan-out per vertex is bounded by its
-    out-degree under this orientation (≤ O(sqrt(|E|)) per the standard
-    arboricity argument), so a high-degree hub never expands
-    quadratically, whatever its vertex id. Degrees are recomputed per
-    round on the SURVIVING edges. Drop every edge below k−2 support,
-    repeat until stable. The edge set only shrinks; lineage cut per
-    round. Returns surviving ``(a, b, support)`` rows (a < b).
+    EDGES: per round, :func:`triangles` enumerates the surviving edges'
+    triangles (degree-ordered orientation, so a high-degree hub never
+    expands quadratically, whatever its vertex id; degrees are recomputed
+    per round on the SURVIVING edges) and each triangle credits its three
+    edges. Drop every edge below k−2 support, repeat until stable. The
+    edge set only shrinks; lineage cut per round. Returns surviving
+    ``(a, b, support)`` rows (a < b).
 
     Reference parity: no analogue; north-star analytics extension
     (clique/cycle golden + brute-force-reference test in
@@ -1900,68 +1905,7 @@ def k_truss(edges: DataFrame, k: int, max_iter: int = 100) -> DataFrame:
     for _ in range(max_iter):
         if e.isEmpty():
             return e.withColumn("support", F.lit(0).cast("bigint"))
-        # orient each surviving edge low→high by (degree, id): wedges fan
-        # out only at the low end, so a hub's expansion is bounded by its
-        # orientation out-degree, not its raw degree
-        deg = (
-            e.select(F.col("a").alias("vid"))
-            .unionAll(e.select(F.col("b").alias("vid")))
-            .groupBy("vid")
-            .agg(F.count(F.lit(1)).alias("dg"))
-        )
-        ed = e.join(
-            deg.select(F.col("vid").alias("a"), F.col("dg").alias("da")), "a"
-        ).join(deg.select(F.col("vid").alias("b"), F.col("dg").alias("db")), "b")
-        a_low = F.struct(F.col("da"), F.col("a")) < F.struct(
-            F.col("db"), F.col("b")
-        )
-        oriented = ed.select(
-            F.when(a_low, F.col("a")).otherwise(F.col("b")).alias("x"),
-            F.when(a_low, F.col("b")).otherwise(F.col("a")).alias("y"),
-            # the tip's (degree, id) key orders the wedge pair so each
-            # triangle materializes exactly once
-            F.when(
-                a_low,
-                F.struct(F.col("db").alias("d"), F.col("b").alias("v")),
-            )
-            .otherwise(F.struct(F.col("da").alias("d"), F.col("a").alias("v")))
-            .alias("ky"),
-        ).localCheckpoint()
-        wedges = (
-            oriented.alias("e1")
-            .join(
-                oriented.alias("e2"),
-                (F.col("e1.x") == F.col("e2.x"))
-                & (F.col("e1.ky") < F.col("e2.ky")),
-            )
-            .select(
-                F.col("e1.x").alias("wa"),
-                F.col("e1.y").alias("wb"),
-                F.col("e2.y").alias("wc"),
-            )
-        )
-        # closing edge: oriented wb→wc exists by construction iff the
-        # undirected edge {wb, wc} survives (ky(wb) < ky(wc) in the wedge)
-        tri = wedges.join(
-            oriented.select(F.col("x").alias("wb"), F.col("y").alias("wc")),
-            ["wb", "wc"],
-        ).localCheckpoint()
-
-        def canon(u: str, v: str):
-            return [
-                F.least(F.col(u), F.col(v)).alias("a"),
-                F.greatest(F.col(u), F.col(v)).alias("b"),
-            ]
-
-        sup_ab = tri.select(*canon("wa", "wb"))
-        sup_ac = tri.select(*canon("wa", "wc"))
-        sup_bc = tri.select(*canon("wb", "wc"))
-        support = (
-            sup_ab.unionAll(sup_ac)
-            .unionAll(sup_bc)
-            .groupBy("a", "b")
-            .agg(F.count(F.lit(1)).alias("support"))
-        )
+        support = _edge_support(triangles(e).localCheckpoint())
         scored = e.join(support, ["a", "b"], "left").select(
             "a", "b", F.coalesce("support", F.lit(0)).alias("support")
         ).localCheckpoint()
@@ -2193,14 +2137,12 @@ def betweenness_centrality(
             .localCheckpoint()
         )
         contribs.append(delta)
-    acc = None
-    for c in contribs:
-        acc = c if acc is None else acc.unionAll(c)
-    if acc is None:
+    if not contribs:
         return verts.select("vid", F.lit(0.0).alias("bc"))
     # drop each root's own source vertex (the `w != s` term of Brandes)
     acc = (
-        acc.join(F.broadcast(idx_src), "root")
+        reduce(DataFrame.unionAll, contribs)
+        .join(F.broadcast(idx_src), "root")
         .where(F.col("vid") != F.col("svid"))
         .select("vid", "delta")
     )
@@ -2280,15 +2222,9 @@ def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
     # a singleton or under its label, per the documented convention); its
     # degree term contributes 0 to q either way
     verts = _all_vertices(edges)
-    deg_e = (
-        und.select(F.col("a").alias("vid"))
-        .unionAll(und.select(F.col("b").alias("vid")))
-        .groupBy("vid")
-        .agg(F.count(F.lit(1)).alias("dg"))
-    )
     deg = (
-        verts.join(deg_e, "vid", "left")
-        .select("vid", F.coalesce("dg", F.lit(0)).alias("dg"))
+        verts.join(_degree(und), "vid", "left")
+        .select("vid", F.coalesce("d", F.lit(0)).alias("dg"))
         .join(lab, "vid", "left")
     )
     eff = F.when(
@@ -2369,15 +2305,7 @@ def greedy_coloring(edges: DataFrame, max_colors: int = 64) -> DataFrame:
         # max_colors rounds as "exceeded" (the for/else raise below)
         if remaining_v.isEmpty():
             break
-        picked = colored.select("vid")
-        remaining_e = (
-            remaining_e.join(
-                picked.withColumnRenamed("vid", "a"), "a", "left_anti"
-            )
-            .join(picked.withColumnRenamed("vid", "b"), "b", "left_anti")
-            .select("a", "b")
-            .localCheckpoint()
-        )
+        remaining_e = _without(remaining_e, colored).localCheckpoint()
     else:
         raise RuntimeError(f"greedy_coloring: exceeded {max_colors} colors")
     if out is None:
@@ -2418,8 +2346,8 @@ def hits(edges: DataFrame, iterations: int = 8) -> DataFrame:
             "vid", F.lit(0.0).alias("hub"), F.lit(0.0).alias("authority")
         )
     if e.isEmpty():
-        # every edge was a self-loop: without the short-circuit a_raw /
-        # h_raw are empty, the totals aggregate to NULL, and every
+        # every edge was a self-loop: without the short-circuit both raw
+        # flows are empty, the totals aggregate to NULL, and every
         # normalized score becomes NULL via division by NULL — the
         # documented convention is 0/0 scores for such vertices
         return verts.select(
@@ -2430,55 +2358,42 @@ def hits(edges: DataFrame, iterations: int = 8) -> DataFrame:
     init = (Decimal(1) / Decimal(n)).quantize(
         Decimal(1).scaleb(-12), rounding=ROUND_HALF_UP
     )
+
+    def half_step(scores: DataFrame, frm: str, to: str) -> DataFrame:
+        """Flow ``scores`` along the edges from their ``frm`` end to their
+        ``to`` end, then L1-normalize by the exact decimal total."""
+        raw = (
+            e.join(scores.withColumnRenamed("vid", frm), frm)
+            .groupBy(F.col(to).alias("vid"))
+            .agg(F.sum("s").alias("raw"))
+        )
+        tot = raw.agg(F.sum("raw").alias("t"))
+        # operands cast to decimal(26,12) so Spark's division typing keeps
+        # scale 12 (decimal(38,12)/decimal(38,12) would adjust to scale 6,
+        # silently quantizing scores — fatal once per-vertex mass ~1/n
+        # drops below 1e-6 on large graphs)
+        return (
+            verts.join(raw, "vid", "left")
+            .crossJoin(F.broadcast(tot))
+            .select(
+                "vid",
+                (
+                    F.coalesce(F.col("raw"), F.lit(0).cast("decimal(28,12)"))
+                    .cast("decimal(26,12)")
+                    / F.col("t").cast("decimal(26,12)")
+                )
+                .cast("decimal(28,12)")
+                .alias("s"),
+            )
+        )
+
     hub = verts.select(
         "vid", F.lit(str(init)).cast("decimal(28,12)").alias("s")
     )
     auth = hub
     for i in range(iterations):
-        a_raw = (
-            e.join(hub.withColumnRenamed("vid", "src"), "src")
-            .groupBy(F.col("dst").alias("vid"))
-            .agg(F.sum("s").alias("raw"))
-        )
-        a_tot = a_raw.agg(F.sum("raw").alias("t"))
-        # operands cast to decimal(26,12) so Spark's division typing keeps
-        # scale 12 (decimal(38,12)/decimal(38,12) would adjust to scale 6,
-        # silently quantizing scores — fatal once per-vertex mass ~1/n
-        # drops below 1e-6 on large graphs)
-        auth = (
-            verts.join(a_raw, "vid", "left")
-            .crossJoin(F.broadcast(a_tot))
-            .select(
-                "vid",
-                (
-                    F.coalesce(F.col("raw"), F.lit(0).cast("decimal(28,12)"))
-                    .cast("decimal(26,12)")
-                    / F.col("t").cast("decimal(26,12)")
-                )
-                .cast("decimal(28,12)")
-                .alias("s"),
-            )
-        )
-        h_raw = (
-            e.join(auth.withColumnRenamed("vid", "dst"), "dst")
-            .groupBy(F.col("src").alias("vid"))
-            .agg(F.sum("s").alias("raw"))
-        )
-        h_tot = h_raw.agg(F.sum("raw").alias("t"))
-        hub = (
-            verts.join(h_raw, "vid", "left")
-            .crossJoin(F.broadcast(h_tot))
-            .select(
-                "vid",
-                (
-                    F.coalesce(F.col("raw"), F.lit(0).cast("decimal(28,12)"))
-                    .cast("decimal(26,12)")
-                    / F.col("t").cast("decimal(26,12)")
-                )
-                .cast("decimal(28,12)")
-                .alias("s"),
-            )
-        )
+        auth = half_step(hub, "src", "dst")
+        hub = half_step(auth, "dst", "src")
         if i % 3 == 2:
             hub = hub.localCheckpoint()
             auth = auth.localCheckpoint()
@@ -2511,6 +2426,27 @@ def _undirected(edges: DataFrame) -> DataFrame:
         )
         .where(F.col("a") != F.col("b"))
         .distinct()
+    )
+
+
+def _degree(und: DataFrame) -> DataFrame:
+    """``(vid, d)``: every endpoint of the ``(a, b)`` edge set ``und`` with
+    its number of incident edges."""
+    return (
+        und.select(F.col("a").alias("vid"))
+        .unionAll(und.select(F.col("b").alias("vid")))
+        .groupBy("vid")
+        .agg(F.count(F.lit(1)).alias("d"))
+    )
+
+
+def _without(und: DataFrame, verts: DataFrame) -> DataFrame:
+    """The ``(a, b)`` edges of ``und`` with neither endpoint in ``verts``'
+    ``vid`` column."""
+    return (
+        und.join(verts.select(F.col("vid").alias("a")), "a", "left_anti")
+        .join(verts.select(F.col("vid").alias("b")), "b", "left_anti")
+        .select("a", "b")
     )
 
 

@@ -28,10 +28,13 @@ Scale shapes:
 - linkage joins on the BLOCK key only (never a cross product); a
   low-cardinality block key at 100 TB needs the salted-join treatment
   (see join_salted_skew) or a composite block key;
-- link prediction wedge-joins the adjacency on the mid vertex — the same
-  hub-skew exposure as triangle counting, bounded here by the fixture
-  graph's degree; the production-scale answer is degree-ordered
-  orientation exactly as operators/graph.py:triangle_count does.
+- link prediction wedge-joins the adjacency on the mid vertex, so a hub
+  of degree d emits d² candidate pairs; the fixture graph's degree bounds
+  it here. It is not a triangle enumeration (the pairs it scores are the
+  UNconnected ones), so operators/graph.py's degree-ordered ``triangles``
+  does not apply; the scale answer is a degree cap or a sampled
+  neighborhood on the mid vertex. Local clustering does enumerate
+  triangles, and runs on ``triangles``.
 """
 
 from __future__ import annotations
@@ -1080,10 +1083,9 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     adjacency → wedge self-join on the shared neighbor → anti-join
     removes existing edges → degree join for the Jaccard denominator.
     Counts are integers; the one float is a single division, rounded.
-    The wedge join carries the same hub-skew exposure as triangle
-    counting; at scale the mid-vertex join takes the degree-oriented
-    treatment of operators/graph.py:triangle_count (probe:
-    BASELINE.md round-5 notes)."""
+    The wedge join carries a hub-skew exposure (d² pairs at a degree-d
+    mid vertex). Orientation does not bound it, because the pairs scored
+    are the unconnected ones, not triangles (see the module docstring)."""
     ps = (
         load_table(spark, sf_dir, "lineitem")
         .select("l_partkey", "l_suppkey")
@@ -2870,12 +2872,18 @@ def graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     2·T(v)/(d(v)(d(v)−1)) — how clique-like each vertex's neighborhood is
     (the micro-scale community signal; its average is the
     Watts-Strogatz clustering statistic). Triangles enumerate once
-    through the ORIENTED wedge join (a<b<c — each triangle exactly once,
-    hub fan-out bounded by orientation, same device as triangle_count)
-    and credit all three corners; degrees are one aggregate; the
-    coefficient is exact-integer arithmetic with one rounded division.
-    Top-25 most clustered among vertices with degree ≥ 5."""
+    through operators/graph.py ``triangles`` (degree-ordered orientation,
+    so hub fan-out is bounded) and credit all three corners; degrees are
+    one aggregate; the coefficient is exact-integer arithmetic with one
+    rounded division. Top-25 most clustered among vertices with
+    degree ≥ 5."""
     from pyspark.sql import Window as W
+
+    from distributed_graph_database_system_spark.operators.graph import (
+        _degree,
+        _vertex_credit,
+        triangles,
+    )
 
     li = load_table(spark, sf_dir, "lineitem")
     nxt = F.lead("l_partkey").over(
@@ -2888,33 +2896,14 @@ def graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
         )
         .distinct()
-    )
-    e1 = ed.select(F.col("a").alias("wa"), F.col("b").alias("wb"))
-    e2 = ed.select(F.col("a").alias("wa"), F.col("b").alias("wc"))
-    wedge = e1.join(e2, "wa").where(F.col("wb") < F.col("wc"))
-    tri = wedge.join(
-        ed.select(F.col("a").alias("wb"), F.col("b").alias("wc")), ["wb", "wc"]
-    ).select(
-        F.col("wa").alias("ta"), F.col("wb").alias("tb"), F.col("wc").alias("tc")
-    )
-    tcount = (
-        tri.select(F.col("ta").alias("v"))
-        .unionAll(tri.select(F.col("tb").alias("v")))
-        .unionAll(tri.select(F.col("tc").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("t"))
-    )
-    deg = (
-        ed.select(F.col("a").alias("v"))
-        .unionAll(ed.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("d"))
+        .localCheckpoint()  # read by triangles and by the degree aggregate
     )
     return (
-        deg.join(tcount, "v", "left")
+        _degree(ed)
+        .join(_vertex_credit(triangles(ed)), "vid", "left")
         .where(F.col("d") >= 5)
         .select(
-            F.col("v").alias("vid"),
+            "vid",
             F.col("d").cast("bigint").alias("degree"),
             F.coalesce("t", F.lit(0)).cast("bigint").alias("triangles"),
             F.round(

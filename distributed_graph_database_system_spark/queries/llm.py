@@ -71,7 +71,15 @@ def _docs_fanned(spark: SparkSession, sf_dir: str) -> DataFrame:
     Contrast operators/dedup.py::_cpu_fanned, whose cheaper shingle
     hashing only fans out under severe scan under-parallelism (its A/B
     went the other way). At cluster scale the same effect comes from
-    lowering spark.sql.files.maxPartitionBytes for compute-heavy scans."""
+    lowering spark.sql.files.maxPartitionBytes for compute-heavy scans.
+
+    Open defect (ROADMAP carry-forward, fan-out policy): the rule reads
+    byte-range splits, not row groups. Measured at ``local[4]``: the sf0.1
+    fixture's ``documents.parquet`` (1 row group, 594 KB) reads as 4
+    partitions holding ``[0, 5000, 0, 0]`` rows, so the rule does not fire
+    and one task carries every document; perfbench's 16-row-group file
+    reads ``[1565, 1565, 1565, 305]`` and does not fire either; sf0.01
+    (1 row group) reads as 1 partition, where it fires."""
     d = load_table(spark, sf_dir, "documents")
     target = spark.sparkContext.defaultParallelism
     return d.repartition(target, "doc_id") if d.rdd.getNumPartitions() < target else d

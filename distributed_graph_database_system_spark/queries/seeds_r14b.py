@@ -810,11 +810,15 @@ def documents_lang_source_mutual_info(
 def graph_clustering_coeff_g6(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Local clustering coefficient of every G6 vertex: 2·tri(v) /
     (deg(v)·(deg(v)−1)) — the transitivity profile separating the clique
-    (cc = 1) from the cycle and pendant (cc = 0). Triangles per vertex
-    come from the two-hop + closing-edge join over the symmetrized edge
-    table (each triangle at v counted once per neighbor order, halved);
-    all counts exact integers, the coefficient one rounded division. The
-    oracle recomputes the same joins on the VALUES edge list."""
+    (cc = 1) from the cycle and pendant (cc = 0). Triangles come once
+    each from operators/graph.py ``triangles`` over the canonical
+    (src < dst) edges and credit all three corners; all counts exact
+    integers, the coefficient one rounded division. The oracle counts
+    them with a two-hop + closing-edge join on the VALUES edge list."""
+    from distributed_graph_database_system_spark.operators.graph import (
+        _vertex_credit,
+        triangles,
+    )
     from distributed_graph_database_system_spark.queries.graph import (
         G6,
         _edges,
@@ -822,22 +826,14 @@ def graph_clustering_coeff_g6(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sym = G6 + [(b, a) for a, b in G6]
     e = _edges(spark, sym)
-    deg = e.groupBy(F.col("src").alias("v")).agg(
+    deg = e.groupBy(F.col("src").alias("vid")).agg(
         F.count(F.lit(1)).cast("bigint").alias("d")
     )
-    e1 = e.select(F.col("src").alias("v"), F.col("dst").alias("w1"))
-    e2 = e.select(F.col("src").alias("w1"), F.col("dst").alias("w2"))
-    e3 = e.select(F.col("src").alias("v"), F.col("dst").alias("w2"))
-    tri = (
-        e1.join(e2, "w1")
-        .join(e3, ["v", "w2"])
-        .groupBy("v")
-        .agg((F.count(F.lit(1)) / 2).cast("bigint").alias("t"))
-    )
+    tri = triangles(e.where(F.col("src") < F.col("dst")).toDF("a", "b"))
     return (
-        deg.join(tri, "v", "left")
+        deg.join(_vertex_credit(tri), "vid", "left")
         .select(
-            F.col("v").cast("bigint").alias("vid"),
+            F.col("vid").cast("bigint").alias("vid"),
             F.col("d").alias("degree"),
             F.coalesce("t", F.lit(0)).cast("bigint").alias("n_triangles"),
             F.round(

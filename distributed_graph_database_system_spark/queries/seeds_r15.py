@@ -2136,28 +2136,25 @@ def _sym_edges(spark: SparkSession, rows: list[tuple[int, int]]) -> DataFrame:
 def graph_edge_jaccard_g6(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Neighborhood Jaccard per edge of the G6 clique+cycle fixture —
     the tie-strength score of link prediction (clique edges score 0.4+,
-    every bridge/cycle edge 0.0: no shared neighbors). Degrees and
-    common-neighbor counts come from two joins over the symmetrized edge
-    set; |N(a) ∪ N(b)| = deg(a) + deg(b) − common. Golden recomputed by
-    an independent python set pass (canonical a < b edges; the cycle
-    edge 9→5 canonicalizes to (5, 9))."""
+    every bridge/cycle edge 0.0: no shared neighbors). An edge's common
+    neighbors close its triangles, so ``n_common`` is the edge's triangle
+    support over operators/graph.py ``triangles`` (the count k_truss
+    peels on); degrees are one aggregate; |N(a) ∪ N(b)| = deg(a) +
+    deg(b) − common. Golden recomputed by an independent python set pass
+    (canonical a < b edges; the cycle edge 9→5 canonicalizes to
+    (5, 9))."""
+    from distributed_graph_database_system_spark.operators.graph import (
+        _edge_support,
+        triangles,
+    )
     from distributed_graph_database_system_spark.queries.graph import G6
 
     e = _sym_edges(spark, G6)
     deg = e.groupBy(F.col("src").alias("v")).agg(
         F.count(F.lit(1)).cast("bigint").alias("deg")
     )
-    pairs = spark.createDataFrame(
-        sorted({(min(a, b), max(a, b)) for a, b in G6}), "a BIGINT, b BIGINT"
-    )
-    na = e.toDF("av", "x")
-    nb = e.toDF("bv", "y")
-    common = (
-        pairs.join(na, F.col("a") == F.col("av"))
-        .join(nb, (F.col("b") == F.col("bv")) & (F.col("x") == F.col("y")))
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_common"))
-    )
+    pairs = e.where(F.col("src") < F.col("dst")).toDF("a", "b")
+    common = _edge_support(triangles(pairs)).withColumnRenamed("support", "n_common")
     j = (
         pairs.join(common, ["a", "b"], "left")
         .na.fill({"n_common": 0})
@@ -2240,8 +2237,11 @@ def graph_transitivity_g8(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the G8 grid-with-chords fixture: 63 wedges, 2 triangles (both
     created by the 1-6 chord), ratio 0.095238 — the whole-graph
     companion to the per-vertex clustering coefficient. Wedges count
-    C(deg,2) exactly; triangles come from the canonical a<b<c
-    three-join; golden recomputed by an independent python pass."""
+    C(deg,2) exactly; triangles come from operators/graph.py
+    triangle_count; golden recomputed by an independent python pass."""
+    from distributed_graph_database_system_spark.operators.graph import (
+        triangle_count,
+    )
     from distributed_graph_database_system_spark.queries.seeds_r13a import G8
 
     e = _sym_edges(spark, G8)
@@ -2251,15 +2251,7 @@ def graph_transitivity_g8(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("n_wedges")
     )
-    und = e.where(F.col("src") < F.col("dst"))
-    ab = und.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-    bc = und.select(F.col("src").alias("b"), F.col("dst").alias("c"))
-    ac = und.select(F.col("src").alias("a"), F.col("dst").alias("c"))
-    tri = (
-        ab.join(bc, "b")
-        .join(ac, ["a", "c"])
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_triangles"))
-    )
+    tri = triangle_count(e.where(F.col("src") < F.col("dst")))
     return wedges.join(tri, F.lit(True), "left").select(
         "n_wedges",
         "n_triangles",

@@ -3184,23 +3184,20 @@ def graph_triad_census_g6(spark: SparkSession, sf_dir: str) -> DataFrame:
     by edge count (empty / one-edge / wedge / triangle), the motif
     fingerprint behind clustering and balance analyses. Computed by
     EXACT combinatorial identities instead of enumerating C(n,3)
-    triples: triangles T from the canonical a<b<c three-join, closed
+    triples: triangles T from operators/graph.py triangle_count, closed
     wedges ΣC(d,2) = 3T + N₂, edge-anchored triples m(n−2) =
     3T + 2N₂ + N₁ — so one degree aggregate + one triangle count yields
     the whole census. Golden verified by an independent brute-force
     python pass over all 120 triples."""
+    from distributed_graph_database_system_spark.operators.graph import (
+        triangle_count,
+    )
     from distributed_graph_database_system_spark.queries.graph import G6
 
     e = _sym16(spark, G6)
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    und = e.where(F.col("src") < F.col("dst"))
-    ab = und.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-    bc = und.select(F.col("src").alias("b"), F.col("dst").alias("c"))
-    ac = und.select(F.col("src").alias("a"), F.col("dst").alias("c"))
-    tri = (
-        ab.join(bc, "b")
-        .join(ac, ["a", "c"])
-        .agg(F.count(F.lit(1)).cast("bigint").alias("t"))
+    tri = triangle_count(e.where(F.col("src") < F.col("dst"))).select(
+        F.col("n_triangles").alias("t")
     )
     base = deg.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),

@@ -117,13 +117,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # future fixture with micros): truncate to whole microseconds.
             df = df.withColumn("ts", F.expr("timestamp_micros(unix_micros(ts))"))
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view for the SQL API."""
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)

@@ -27,9 +27,6 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 
 from distributed_graph_database_system_spark.sources.layout import merge_into
-from distributed_graph_database_system_spark.streaming.events import (
-    run_foreach_batch,
-)
 
 
 def cdc_apply_batch(
@@ -69,17 +66,3 @@ def cdc_apply_batch(
         )
 
     return apply
-
-
-def run_incremental_cdc_apply(
-    spark: SparkSession,
-    changes: DataFrame,
-    target_path: str,
-    key_cols: Sequence[str],
-    op_col: str = "op",
-) -> None:
-    """Drive the change stream to completion through the CDC apply sink."""
-    run_foreach_batch(
-        changes, cdc_apply_batch(spark, target_path, key_cols, op_col),
-        mode="append",
-    )

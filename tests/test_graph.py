@@ -381,6 +381,60 @@ def test_triangle_count(spark):
     assert got == 2
 
 
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_triangles_match_bruteforce_listing(spark, seed):
+    """The shared enumerator against a brute-force listing on seeded graphs
+    with one high-degree hub (a random id, so orientation rather than id
+    order must bound its fan-out), duplicate edges in both directions and
+    self-loops, canonicalized by ``_undirected``: every triangle appears
+    exactly once, each corner order follows the (degree, vid) key, and the
+    per-vertex credit equals a brute-force count."""
+    from itertools import combinations
+
+    from distributed_graph_database_system_spark.operators.graph import (
+        _undirected,
+        _vertex_credit,
+        triangles,
+    )
+
+    rng = random.Random(seed)
+    n = rng.randint(12, 30)
+    hub = rng.randint(1, n)
+    rows = [(hub, v) for v in range(1, n + 1) if v != hub]
+    rows += [(rng.randint(1, n), rng.randint(1, n)) for _ in range(3 * n)]
+    rows += [(b, a) for a, b in rows[: n // 2]] + rows[n // 2 : n]
+    rows += [(v, v) for v in rng.sample(range(1, n + 1), 3)]
+    adj: dict[int, set[int]] = {}
+    for a, b in rows:
+        if a != b:
+            adj.setdefault(a, set()).add(b)
+            adj.setdefault(b, set()).add(a)
+    want = {
+        (x, y, z)
+        for x, y, z in combinations(sorted(adj), 3)
+        if y in adj[x] and z in adj[x] and z in adj[y]
+    }
+    assert want, "fixture must contain triangles"
+
+    tri = triangles(_undirected(edges_df(spark, rows))).localCheckpoint()
+    got = [tuple(r) for r in tri.collect()]
+    assert len(got) == len(want)
+    assert {tuple(sorted(t)) for t in got} == want
+
+    def key(v):
+        return (len(adj[v]), v)
+
+    assert all(key(u) < key(v) < key(w) for u, v, w in got)
+    # per-vertex credit: adjacent pairs among each vertex's neighbours
+    credit = {
+        v: sum(1 for x, y in combinations(sorted(nbrs), 2) if y in adj[x])
+        for v, nbrs in adj.items()
+    }
+    assert dict(_vertex_credit(tri).collect()) == {
+        v: c for v, c in credit.items() if c
+    }
+
+
 def spy_distributed_traversals(monkeypatch):
     """Record the name of every ``G.bfs`` / ``G.dfs_leaves`` call (the
     ``bfs`` call inside ``dfs_leaves`` included)."""
@@ -1631,6 +1685,17 @@ def test_coreness_consistent_with_kcore_and_reference(spark, sf_dir):
     # cross-check against the independent k_core operator at k = 3
     core3 = {r["vid"] for r in k_core(ed, k=3).collect()}
     assert core3 == {v for v, c in got.items() if c >= 3}
+
+
+def test_coreness_of_edgeless_graph_is_empty(spark):
+    """No edge, or self-loops only: no vertex is incident to an edge, so
+    the decomposition is empty, as ``k_core``'s is."""
+    from distributed_graph_database_system_spark.operators.graph import (
+        core_decomposition,
+    )
+
+    for rows in ([], [(3, 3), (5, 5)]):
+        assert core_decomposition(edges_df(spark, rows)).collect() == []
 
 
 def _py_k_truss(pairs: list[tuple[int, int]], k: int) -> dict[tuple[int, int], int]:
