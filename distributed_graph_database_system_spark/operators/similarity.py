@@ -20,6 +20,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from distributed_graph_database_system_spark.sources.io import hadoop_path
+
 
 def _as_double(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
@@ -366,9 +368,7 @@ def append_ivf_index(
     tests/test_llm.py). Returns the centroids in effect."""
     spark = embeddings.sparkSession
     cent_path = path.rstrip("/") + "_centroids"
-    jvm = spark._jvm
-    hp = jvm.org.apache.hadoop.fs.Path(cent_path)
-    fs = hp.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hp = hadoop_path(spark, cent_path)
     if fs.exists(hp):
         # read the sidecar DIRECTLY — read_ivf_index also opens the index
         # root, which does not exist yet if the first batch crashed between

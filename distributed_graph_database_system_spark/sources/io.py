@@ -10,6 +10,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
+def hadoop_path(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` for ``path`` under the session's Hadoop
+    configuration — the one resolver behind every file-level operation
+    in ``sources/`` and the streaming ledgers, so they work on any
+    supported URI, not just local paths."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
 def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     df.write.mode(mode).option("header", "true").csv(path)
 
@@ -124,10 +133,8 @@ def read_parquet_resilient(
             .where("NOT ok")
             .collect()
         ]
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        out = fs.create(jvm.org.apache.hadoop.fs.Path(quarantine_log), True)
+        fs, log_p = hadoop_path(spark, quarantine_log)
+        out = fs.create(log_p, True)
         try:
             out.write(("\n".join(bad) + "\n").encode() if bad else b"")
         finally:

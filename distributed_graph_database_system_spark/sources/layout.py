@@ -35,6 +35,8 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
+from distributed_graph_database_system_spark.sources.io import hadoop_path
+
 
 def write_partitioned(
     df: DataFrame,
@@ -225,16 +227,13 @@ def compact(
     multiple ~``target_bytes`` files instead of collapsing to one file per
     directory (which hashing the partition columns alone would do).
 
-    Swap order is crash-safe: the rewrite lands in a tmp dir, the original
-    is renamed ASIDE (not deleted), the tmp renamed in, and only then is the
-    backup deleted — at every intermediate step the data exists at ``path``
-    or at a recoverable ``__compact_bak`` sibling.
+    The rewrite is swapped in by :func:`swap_dir` (tag ``compact``): at
+    every intermediate step the data exists at ``path`` or at a
+    recoverable ``__compact_bak`` sibling.
     """
     import math
 
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath = hadoop_path(spark, path)
     total = fs.getContentSummary(hpath).getLength()
     n = max(1, math.ceil(total / target_bytes))
     df = spark.read.parquet(path)
@@ -242,8 +241,6 @@ def compact(
     # FULL nested chain (e.g. day=D/batch_id=N), in directory order, so the
     # rewrite re-applies the exact layout writers and readers depend on.
     part_cols, n_leaf_dirs = _partition_layout(fs, hpath)
-    tmp = path.rstrip("/") + "__compact_tmp"
-    bak = path.rstrip("/") + "__compact_bak"
     if part_cols:
         from pyspark.sql import functions as F
 
@@ -272,17 +269,33 @@ def compact(
     writer = w.write.mode("overwrite")
     if part_cols:
         writer = writer.partitionBy(*part_cols)
-    writer.parquet(tmp)
-    tmp_p = jvm.org.apache.hadoop.fs.Path(tmp)
-    bak_p = jvm.org.apache.hadoop.fs.Path(bak)
+    swap_dir(spark, path, "compact", writer.parquet)
+    return n
+
+
+def swap_dir(spark: SparkSession, path: str, tag: str, stage) -> None:
+    """Replace the whole directory ``path`` with what ``stage(tmp)``
+    writes, crash-safely: the rewrite lands in a ``__<tag>_tmp`` sibling,
+    the original is renamed ASIDE to ``__<tag>_bak`` (not deleted), the
+    tmp renamed in, and only then is the backup deleted — at every
+    intermediate step the data exists at ``path`` or at the backup. A
+    failed swap-in renames the backup back. Shared by :func:`compact`
+    and the rollup ledger fold (``streaming.events.compact_contrib_ledger``).
+    """
+    base = path.rstrip("/")
+    tmp, bak = f"{base}__{tag}_tmp", f"{base}__{tag}_bak"
+    fs, hpath = hadoop_path(spark, path)
+    _, tmp_p = hadoop_path(spark, tmp)
+    _, bak_p = hadoop_path(spark, bak)
+    fs.delete(tmp_p, True)  # stale staging from an earlier failed run
+    stage(tmp)
     fs.delete(bak_p, True)  # stale backup from an earlier failed run
     if not fs.rename(hpath, bak_p):
-        raise IOError(f"compact: backup rename {path} -> {bak} failed")
+        raise IOError(f"{tag}: backup rename {path} -> {bak} failed")
     if not fs.rename(tmp_p, hpath):
         fs.rename(bak_p, hpath)  # roll back; original data restored
-        raise IOError(f"compact: rename {tmp} -> {path} failed (rolled back)")
+        raise IOError(f"{tag}: rename {tmp} -> {path} failed (rolled back)")
     fs.delete(bak_p, True)
-    return n
 
 
 def physical_plan(df: DataFrame) -> str:
@@ -367,6 +380,81 @@ def _recover_delete_backup(fs, jvm, bak_p, root_p) -> int:
     return restored
 
 
+def _partition_rewrite(spark: SparkSession, path: str, tag: str, what: str):
+    """Open a per-partition rewrite of ``path`` (the shared preamble of
+    :func:`surgical_delete` and :func:`merge_into`): name the
+    ``__<tag>_tmp`` staging and ``__<tag>_bak`` backup siblings, roll back
+    a crashed prior run FIRST — before the dataset is listed or read
+    (``spark.read`` materializes its file index immediately) and before
+    any delete; an unconditional delete of the backup here was the
+    data-loss bug this ordering prevents — then drop stale staging and
+    discover the partition chain. Unpartitioned datasets are refused:
+    there is no partition to scope the rewrite to.
+
+    Returns ``(fs, part_cols, tmp, bak)``."""
+    base = path.rstrip("/")
+    tmp, bak = f"{base}__{tag}_tmp", f"{base}__{tag}_bak"
+    fs, hpath = hadoop_path(spark, path)
+    _recover_delete_backup(fs, spark._jvm, hadoop_path(spark, bak)[1], hpath)
+    fs.delete(hadoop_path(spark, tmp)[1], True)  # stale staging
+    part_cols, _ = _partition_layout(fs, hpath)
+    if not part_cols:
+        raise ValueError(
+            f"{what}: dataset has no hive partitions — a partition-scoped "
+            "rewrite is impossible; use a staged full rewrite instead"
+        )
+    return fs, part_cols, tmp, bak
+
+
+def _in_partitions(part_cols: Sequence[str], rows):
+    """Row predicate: the row's partition tuple is one of ``rows``'
+    (null-safe, so a NULL partition value matches its own directory)."""
+    from functools import reduce
+
+    from pyspark.sql import functions as F
+
+    def tuple_match(row):
+        return reduce(
+            lambda a, b: a & b,
+            (F.col(c).eqNullSafe(F.lit(row[c])) for c in part_cols),
+        )
+
+    return reduce(lambda a, b: a | b, (tuple_match(r) for r in rows))
+
+
+def _swap_partitions(
+    spark: SparkSession, fs, path: str, tmp: str, bak: str,
+    part_cols: Sequence[str], rows, what: str,
+) -> dict[str, int]:
+    """Swap the staged partition directories of ``rows`` into ``path``:
+    originals aside to ``bak`` (recoverable), staged ``tmp`` dirs in, and
+    only then drop the backup — :func:`swap_dir`'s order per partition,
+    so at every intermediate step each partition's data exists at
+    ``path``, ``tmp`` or ``bak``. A partition with no original (a fresh
+    insert) has nothing to move aside; one with no staged directory
+    (every row deleted) has nothing to move in and is removed.
+
+    Returns ``{"rewritten_partitions", "removed_partitions"}``."""
+    jvm = spark._jvm
+    subs = {
+        "/".join(_hive_dirname(jvm, c, r[c]) for c in part_cols) for r in rows
+    }
+    for sub in subs:
+        if fs.exists(hadoop_path(spark, f"{path}/{sub}")[1]):
+            _fs_rename(fs, jvm, f"{path}/{sub}", f"{bak}/{sub}", what)
+    rewritten = 0
+    for sub in subs:
+        if fs.exists(hadoop_path(spark, f"{tmp}/{sub}")[1]):
+            _fs_rename(fs, jvm, f"{tmp}/{sub}", f"{path}/{sub}", what)
+            rewritten += 1
+    fs.delete(hadoop_path(spark, bak)[1], True)
+    fs.delete(hadoop_path(spark, tmp)[1], True)
+    return {
+        "rewritten_partitions": rewritten,
+        "removed_partitions": len(subs) - rewritten,
+    }
+
+
 def surgical_delete(
     spark: SparkSession, path: str, predicate
 ) -> dict[str, int]:
@@ -398,40 +486,17 @@ def surgical_delete(
 
     Rerun-after-crash: a leftover non-empty ``__delete_bak`` means a prior
     run died between renaming originals aside and renaming survivors in —
-    the backup holds the ONLY copy of those partitions' rows, and ``path``
-    still reads "fine" minus them. The recovery here runs FIRST (before
-    the dataset is even listed): every backup partition directory whose
-    ``path`` counterpart is missing is renamed back in, restoring the
-    pre-delete state for exactly the partitions the crashed swap had
-    removed (partitions whose staged rename DID complete keep their
-    survivor copy), and only a then-empty-of-unique-data backup is
-    deleted. The crashed run never returned, so rolling its partial swap
-    back and redoing the delete is the correct semantics — asserted by
-    the crash-injection test in tests/test_layout.py.
+    the backup holds the ONLY copy of those partitions' rows. The rerun
+    FIRST renames back every backup partition directory whose ``path``
+    counterpart is missing (:func:`_recover_delete_backup`; partitions
+    whose staged rename DID complete keep their survivor copy), then
+    redoes the delete. The crashed run never returned, so rolling its
+    partial swap back is the correct semantics — asserted by the
+    crash-injection test in tests/test_layout.py.
     """
-    from functools import reduce
-
-    from pyspark.sql import functions as F
-
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    tmp = path.rstrip("/") + "__delete_tmp"
-    bak = path.rstrip("/") + "__delete_bak"
-    tmp_p = jvm.org.apache.hadoop.fs.Path(tmp)
-    bak_p = jvm.org.apache.hadoop.fs.Path(bak)
-    # Recover a crashed prior run BEFORE listing/reading the dataset (the
-    # spark.read below materializes its file index immediately) and before
-    # any delete — the old unconditional fs.delete(bak_p) here was the
-    # data-loss bug this ordering exists to prevent.
-    _recover_delete_backup(fs, jvm, bak_p, hpath)
-    fs.delete(tmp_p, True)  # stale staging from an earlier failed run
-    part_cols, _ = _partition_layout(fs, hpath)
-    if not part_cols:
-        raise ValueError(
-            "surgical_delete: dataset has no hive partitions — a targeted "
-            "rewrite is impossible; use a filtered full rewrite instead"
-        )
+    fs, part_cols, tmp, bak = _partition_rewrite(
+        spark, path, "delete", "surgical_delete"
+    )
     df = spark.read.parquet(path)
     affected = df.where(predicate).select(*part_cols).distinct().collect()
     if not affected:
@@ -440,53 +505,22 @@ def surgical_delete(
             "rewritten_partitions": 0,
             "removed_partitions": 0,
         }
-
-    def tuple_match(row):
-        return reduce(
-            lambda a, b: a & b,
-            (F.col(c).eqNullSafe(F.lit(row[c])) for c in part_cols),
-        )
-
-    in_affected = reduce(
-        lambda a, b: a | b, (tuple_match(r) for r in affected)
-    )
+    in_affected = _in_partitions(part_cols, affected)
     deleted = df.where(in_affected & predicate).count()
-    survivors = df.where(in_affected & ~predicate)
-    survived = {
-        tuple(r[c] for c in part_cols)
-        for r in survivors.select(*part_cols).distinct().collect()
-    }
-
     # Stage survivors OUTSIDE the dataset first. An in-place dynamic
     # overwrite would (a) race its own source files — the survivors plan
     # re-lists `path` at execution time — and (b) on a failure during the
     # overwrite commit, lose the affected partitions with no backup. The
-    # staged write reads `path` while it is still fully intact.
-    if survived:
-        survivors.write.partitionBy(*part_cols).mode("overwrite").parquet(tmp)
-
-    subs = {
-        tuple(r[c] for c in part_cols): "/".join(
-            _hive_dirname(jvm, c, r[c]) for c in part_cols
-        )
-        for r in affected
-    }
-    # compact()'s swap order: originals aside (recoverable), staged
-    # survivors in, and only then drop the backup — at every intermediate
-    # step each partition's data exists at `path`, `tmp`, or `bak`.
-    for sub in subs.values():
-        _fs_rename(fs, jvm, f"{path}/{sub}", f"{bak}/{sub}", "surgical_delete")
-    for t, sub in subs.items():
-        if t in survived:
-            _fs_rename(
-                fs, jvm, f"{tmp}/{sub}", f"{path}/{sub}", "surgical_delete"
-            )
-    fs.delete(bak_p, True)
-    fs.delete(tmp_p, True)
+    # staged write reads `path` while it is still fully intact; which
+    # partitions survived is read back from the staged directory tree.
+    df.where(in_affected & ~predicate).write.partitionBy(*part_cols).mode(
+        "overwrite"
+    ).parquet(tmp)
     return {
         "deleted_rows": int(deleted),
-        "rewritten_partitions": len(survived),
-        "removed_partitions": len(subs) - len(survived),
+        **_swap_partitions(
+            spark, fs, path, tmp, bak, part_cols, affected, "surgical_delete"
+        ),
     }
 
 
@@ -522,25 +556,9 @@ def merge_into(
     Returns ``{"updated", "inserted", "deleted", "rewritten_partitions",
     "removed_partitions"}``.
     """
-    from functools import reduce
-
-    from pyspark.sql import functions as F
-
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    tmp = path.rstrip("/") + "__merge_tmp"
-    bak = path.rstrip("/") + "__merge_bak"
-    tmp_p = jvm.org.apache.hadoop.fs.Path(tmp)
-    bak_p = jvm.org.apache.hadoop.fs.Path(bak)
-    _recover_delete_backup(fs, jvm, bak_p, hpath)
-    fs.delete(tmp_p, True)
-    part_cols, _ = _partition_layout(fs, hpath)
-    if not part_cols:
-        raise ValueError(
-            "merge_into: dataset has no hive partitions — a pruned merge "
-            "is impossible; use a staged full rewrite instead"
-        )
+    fs, part_cols, tmp, bak = _partition_rewrite(
+        spark, path, "merge", "merge_into"
+    )
     key_cols = list(key_cols)
     target = spark.read.parquet(path)
     if dict(upserts.dtypes) != dict(target.dtypes):
@@ -622,15 +640,7 @@ def merge_into(
             "rewritten_partitions": 0, "removed_partitions": 0,
         }
 
-    def tuple_match(row):
-        return reduce(
-            lambda a, b: a & b,
-            (F.col(c).eqNullSafe(F.lit(row[c])) for c in part_cols),
-        )
-
-    in_affected = reduce(
-        lambda a, b: a | b, (tuple_match(r) for r in subs_rows.values())
-    )
+    in_affected = _in_partitions(part_cols, subs_rows.values())
     keep = target.where(in_affected).join(touched, key_cols, "left_anti")
     merged = keep.unionByName(live_upserts.select(*target.columns))
     # ONE execution of the merged plan: the staged write IS the action;
@@ -638,28 +648,12 @@ def merge_into(
     # tree (a pre-write collect of the partition tuples would run the
     # whole keep/union plan a second time for the write).
     merged.write.partitionBy(*part_cols).mode("overwrite").parquet(tmp)
-
-    subs = {
-        t: "/".join(_hive_dirname(jvm, c, r[c]) for c in part_cols)
-        for t, r in subs_rows.items()
-    }
-    # swap order: originals aside (recoverable), staged in, then drop bak.
-    # A brand-new partition (insert into a fresh day) has no original to
-    # move aside; a fully-deleted one has no staged dir to move in.
-    for t, sub in subs.items():
-        if fs.exists(jvm.org.apache.hadoop.fs.Path(f"{path}/{sub}")):
-            _fs_rename(fs, jvm, f"{path}/{sub}", f"{bak}/{sub}", "merge_into")
-    rewritten = 0
-    for t, sub in subs.items():
-        if fs.exists(jvm.org.apache.hadoop.fs.Path(f"{tmp}/{sub}")):
-            _fs_rename(fs, jvm, f"{tmp}/{sub}", f"{path}/{sub}", "merge_into")
-            rewritten += 1
-    fs.delete(bak_p, True)
-    fs.delete(tmp_p, True)
     return {
         "updated": int(matched_live),
         "inserted": int(n_upserted_live - matched_live),
         "deleted": int(n_deleted),
-        "rewritten_partitions": rewritten,
-        "removed_partitions": len(subs) - rewritten,
+        **_swap_partitions(
+            spark, fs, path, tmp, bak, part_cols, subs_rows.values(),
+            "merge_into",
+        ),
     }

@@ -23,15 +23,11 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-
-def _fs(spark: SparkSession, root: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(root)
-    return jvm, hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+from distributed_graph_database_system_spark.sources.io import hadoop_path
 
 
 def list_versions(spark: SparkSession, root: str) -> list[int]:
-    jvm, fs, hpath = _fs(spark, root)
+    fs, hpath = hadoop_path(spark, root)
     if not fs.isDirectory(hpath):
         return []
     out = []
@@ -87,9 +83,9 @@ def vacuum(spark: SparkSession, root: str, keep_last: int = 2) -> list[int]:
     version numbers. Explicit retention — never implied by a write."""
     if keep_last < 1:
         raise ValueError("vacuum: keep_last must be >= 1")
-    jvm, fs, _ = _fs(spark, root)
     versions = list_versions(spark, root)
     drop = versions[:-keep_last] if len(versions) > keep_last else []
     for v in drop:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{root}/version={v}"), True)
+        fs, vpath = hadoop_path(spark, f"{root}/version={v}")
+        fs.delete(vpath, True)
     return drop

@@ -17,11 +17,14 @@ from __future__ import annotations
 
 import json
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from distributed_graph_database_system_spark.sources.catalog import load_table
+from distributed_graph_database_system_spark.sources.io import hadoop_path
+from distributed_graph_database_system_spark.sources.layout import swap_dir
 
 EVENTS_SCHEMA = (
     "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, "
@@ -194,9 +197,6 @@ def run_foreach_batch_available_now(
             q.stop()
 
 
-from contextlib import contextmanager
-
-
 @contextmanager
 def _dynamic_overwrite(*sessions: SparkSession):
     """Dynamic partition-overwrite on EVERY given session for the block's
@@ -205,8 +205,8 @@ def _dynamic_overwrite(*sessions: SparkSession):
     ResolveWriteToStream) and a write's conf comes from the session its
     DataFrame belongs to, so ledger writes (clone) and rollup rebuilds
     (outer session) BOTH need the flag — missing one silently runs
-    static and truncates every earlier batch's cells. Shared by all
-    three incremental rollups so the dance cannot drift."""
+    static and truncates every earlier batch's cells. Entered once, by
+    the ledger upsert all four incremental rollups share."""
     key = "spark.sql.sources.partitionOverwriteMode"
     uniq = {id(s): s for s in sessions}
     prevs = {k: s.conf.get(key, "static") for k, s in uniq.items()}
@@ -217,12 +217,6 @@ def _dynamic_overwrite(*sessions: SparkSession):
     finally:
         for k, s in uniq.items():
             s.conf.set(key, prevs[k])
-
-
-def _ledger_fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p, jvm
 
 
 def _fold_hwm_path(contrib_path: str) -> str:
@@ -236,19 +230,19 @@ def read_fold_hwm(spark: SparkSession, contrib_path: str) -> int | None:
     """The ledger's fold high-water mark: every ``batch_id`` strictly below
     it has been folded into the ``batch_id=-1`` checkpoint cell. ``None``
     on a never-folded (or pre-hwm legacy) ledger."""
-    fs, p, jvm = _ledger_fs(spark, _fold_hwm_path(contrib_path))
+    fs, p = hadoop_path(spark, _fold_hwm_path(contrib_path))
     if not fs.exists(p):
         return None
     stream = fs.open(p)
     try:
-        txt = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+        txt = spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
     finally:
         stream.close()
     return int(json.loads(txt)["fold_hwm"])
 
 
 def _write_fold_hwm(spark: SparkSession, contrib_path: str, hwm: int) -> None:
-    fs, p, _ = _ledger_fs(spark, _fold_hwm_path(contrib_path))
+    fs, p = hadoop_path(spark, _fold_hwm_path(contrib_path))
     out = fs.create(p, True)
     try:
         out.write(bytearray(json.dumps({"fold_hwm": int(hwm)}), "utf-8"))
@@ -260,7 +254,8 @@ def _guard_ledger_epoch(
     spark: SparkSession, contrib_path: str, rollup_path: str, batch_id: int
 ) -> None:
     """Refuse the two silent-corruption scenarios a restarted stream can
-    cause (shared by all three incremental rollups):
+    cause (checked by the ledger upsert all four incremental rollups
+    share):
 
     1. rollup exists but the contrib ledger is GONE — the mid-swap crash
        window of compact_contrib_ledger (ledger parked at ``__fold_bak``),
@@ -274,9 +269,9 @@ def _guard_ledger_epoch(
        treated as committed by the next fold. Replaying the hwm batch
        itself (== hwm) is the normal at-least-once path and stays allowed.
     """
-    fs, contrib_p, _ = _ledger_fs(spark, contrib_path)
+    fs, contrib_p = hadoop_path(spark, contrib_path)
     if not fs.exists(contrib_p):
-        fs_r, rollup_p, _ = _ledger_fs(spark, rollup_path)
+        fs_r, rollup_p = hadoop_path(spark, rollup_path)
         if fs_r.exists(rollup_p):
             raise IOError(
                 f"rollup upsert: {rollup_path} exists but its contrib "
@@ -296,6 +291,119 @@ def _guard_ledger_epoch(
         )
 
 
+def _kmv_union(col: str):
+    from distributed_graph_database_system_spark.operators.sketch import (
+        kmv_union_expr,
+    )
+
+    return kmv_union_expr(col)
+
+
+# A contrib ledger's value-column merges, declared ONCE: the rollup rebuild
+# and compact_contrib_ledger's fold both aggregate through this table, so a
+# folded ledger rebuilds bit-identical rollups. Every merge is associative
+# and commutative (bottom-k is also idempotent). ``kmv_union`` truncates to
+# the stamped ``kk`` column, which must be a group key (it is: a ledger's
+# non-value columns are its group keys).
+_MERGES = {
+    "sum": F.sum,
+    "max": F.max,
+    "hll_union": F.hll_union_agg,
+    "kmv_union": _kmv_union,
+}
+
+
+def _run_ledger_rollup(
+    spark: SparkSession,
+    stream: DataFrame,
+    rollup_path: str,
+    contribution,
+    merges: dict[str, str],
+    finish=lambda merged: merged,
+    stamp=None,
+) -> None:
+    """The exactly-once ledger upsert behind all four incremental rollups:
+    an EXACTLY-ONCE effect on top of foreachBatch's at-least-once
+    execution, with plain parquet. Two idempotent steps per batch:
+
+    1. ``contribution(batch_df)`` — the batch's partial state keyed by a
+       DATE ``day`` column, materialized once — lands in its own
+       ``<rollup>_contrib/day=D/batch_id=N`` ledger cells via dynamic
+       partition overwrite: a replayed batch overwrites ITS OWN cells with
+       identical content (file-source replay is deterministic), never
+       double-appends;
+    2. the rollup rows for ONLY the touched days are REBUILT from the
+       ledger alone — every non-value column is a group key, each value
+       column merges by its ``merges`` entry (a :data:`_MERGES` name), and
+       ``finish`` derives the published columns — and swapped in with
+       dynamic partition overwrite. A pure function of the ledger, so
+       re-running it converges (never existing-rollup + delta: that merge
+       double-counts on replay).
+
+    A crash between the steps leaves the ledger committed and the rollup
+    stale for those days; the retry redoes both and lands in the same
+    state. The ledger grows one small cell per (day, batch); fold it with
+    :func:`compact_contrib_ledger`.
+
+    ``stamp = (col, value, refusal)`` names a sketch parameter stamped on
+    every ledger row (CMS ``w``, KMV ``kk``). The EXISTING ledger is
+    checked against it BEFORE any write — a misconfigured upsert must
+    refuse without side effects, or its committed cells would brick every
+    later correct upsert — raising ``ValueError(refusal(lo, hi))`` on any
+    other stamped value. Pre-stamp ledger rows (NULL under mergeSchema)
+    are folded into the stamped cells by the rebuild."""
+    contrib_path = rollup_path.rstrip("/") + "_contrib"
+    # a stamped ledger may still hold pre-stamp files: merge their schemas
+    ledger_reader = spark.read.option("mergeSchema", stamp is not None)
+
+    def upsert(batch_df: DataFrame, batch_id: int) -> None:
+        _guard_ledger_epoch(spark, contrib_path, rollup_path, batch_id)
+        # tiny (days × groups rows): materialize once, reuse for the
+        # day list AND the ledger write
+        contrib = contribution(batch_df).localCheckpoint()
+        days = [r["day"] for r in contrib.select("day").distinct().collect()]
+        if not days:
+            return
+        fs, contrib_p = hadoop_path(spark, contrib_path)
+        if stamp is not None and fs.exists(contrib_p):
+            col, value, refusal = stamp
+            ledger = ledger_reader.parquet(contrib_path)
+            lo, hi = (
+                ledger.agg(F.min(col), F.max(col)).first()
+                if col in ledger.columns
+                else (None, None)
+            )
+            if any(v is not None and v != value for v in (lo, hi)):
+                raise ValueError(refusal(lo, hi))
+        # contrib derives from batch_df → the per-batch session CLONE; the
+        # rebuild derives from spark.read → the outer session. BOTH need
+        # dynamic overwrite (see _dynamic_overwrite).
+        with _dynamic_overwrite(spark, contrib.sparkSession):
+            contrib.withColumn("batch_id", F.lit(int(batch_id))).write.partitionBy(
+                "day", "batch_id"
+            ).mode("overwrite").parquet(contrib_path)
+            # the day filter prunes the rebuild to the touched day dirs
+            ledger = ledger_reader.parquet(contrib_path).where(
+                F.col("day").isin(days)
+            )
+            if stamp is not None:
+                col, value, _ = stamp
+                ledger = ledger.withColumn(
+                    col,
+                    F.coalesce(
+                        F.col(col), F.lit(value).cast(ledger.schema[col].dataType)
+                    ),
+                )
+            merged = ledger.groupBy(
+                *[c for c in contrib.columns if c not in merges]
+            ).agg(*[_MERGES[m](c).alias(c) for c, m in merges.items()])
+            finish(merged).write.partitionBy("day").mode("overwrite").parquet(
+                rollup_path
+            )
+
+    run_foreach_batch(stream, upsert, mode="append")
+
+
 def run_incremental_daily_rollup(
     spark: SparkSession, stream: DataFrame, rollup_path: str
 ) -> None:
@@ -310,71 +418,27 @@ def run_incremental_daily_rollup(
     of (existing ∪ contribution); no full-table state is held in the
     streaming job at all.
 
-    Delivery: EXACTLY-ONCE effect on top of foreachBatch's at-least-once
-    execution, with plain parquet. Two idempotent steps per batch:
-
-    1. the batch's contribution lands in a per-batch ledger partition
-       (``<rollup>_contrib/day=D/batch_id=N`` via dynamic partition
-       overwrite) — a replayed batch overwrites ITS OWN ledger cells with
-       identical content (file-source replay is deterministic), never
-       double-appends;
-    2. the rollup rows for the touched days are REBUILT from the ledger
-       (sum over all batches' contributions for those days) and swapped in
-       with dynamic partition overwrite — a pure function of the ledger, so
-       re-running it converges.
-
-    A crash between the steps leaves the ledger committed and the rollup
-    stale for those days; the retry redoes both and lands in the same
-    state. The ledger accumulates one small file per (day, batch) — the
-    same small-file growth any log-structured table has; compactable with
-    ``sources.layout.compact`` without changing reads.
+    Delivery is exactly-once through the shared ledger upsert
+    (:func:`_run_ledger_rollup`): the batch's contribution lands in its own
+    ``(day, batch_id)`` ledger cells, and the touched days are rebuilt from
+    the ledger. The ledger accumulates one small file per (day, batch);
+    fold it with :func:`compact_contrib_ledger` (``{"n": "sum",
+    "dec_value": "sum"}``) without changing reads.
     """
 
-    contrib_path = rollup_path.rstrip("/") + "_contrib"
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        _guard_ledger_epoch(spark, contrib_path, rollup_path, batch_id)
-        contrib_rows = (
-            # DATE partition column: date-typed directory values round-trip
-            # through hive partition inference; timestamps don't reliably.
-            batch_df.groupBy(
-                F.to_date(F.col("ts")).alias("day"), F.col("event_type")
-            )
-            .agg(
-                F.count("*").alias("n"),
-                F.sum(F.col("value").cast("decimal(18,2)")).alias("dec_value"),
-            )
-            # ONE aggregation job per batch: the result is tiny (days ×
-            # event_types), so collect it and rebuild — referencing the lazy
-            # frame from both the day-list and the merge write would run the
-            # full batch aggregation twice.
-            .collect()
+    def contribution(batch_df: DataFrame) -> DataFrame:
+        # DATE partition column: date-typed directory values round-trip
+        # through hive partition inference; timestamps don't reliably.
+        return batch_df.groupBy(
+            F.to_date(F.col("ts")).alias("day"), F.col("event_type")
+        ).agg(
+            F.count("*").alias("n"),
+            F.sum(F.col("value").cast("decimal(18,2)")).alias("dec_value"),
         )
-        if not contrib_rows:
-            return
-        days = sorted({r["day"] for r in contrib_rows})
-        contrib = spark.createDataFrame(
-            contrib_rows,
-            "day DATE, event_type STRING, n BIGINT, dec_value DECIMAL(28,2)",
-        )
-        with _dynamic_overwrite(spark):
-            # step 1: idempotent ledger commit — only this batch's
-            # (day, batch_id) cells are replaced
-            contrib.withColumn("batch_id", F.lit(int(batch_id))).write.partitionBy(
-                "day", "batch_id"
-            ).mode("overwrite").parquet(contrib_path)
-            # step 2: rebuild the touched days from the ledger alone (never
-            # existing-rollup + delta: that merge double-counts on replay).
-            # The day filter prunes to the touched day directories.
-            merged = (
-                spark.read.parquet(contrib_path)
-                .where(F.col("day").isin(days))
-                .groupBy("day", "event_type")
-                .agg(F.sum("n").alias("n"), F.sum("dec_value").alias("dec_value"))
-            )
-            merged.write.partitionBy("day").mode("overwrite").parquet(rollup_path)
 
-    run_foreach_batch(stream, upsert, mode="append")
+    _run_ledger_rollup(
+        spark, stream, rollup_path, contribution, {"n": "sum", "dec_value": "sum"}
+    )
 
 
 def read_rollup(spark: SparkSession, rollup_path: str) -> DataFrame:
@@ -411,42 +475,21 @@ def run_incremental_distinct_rollup(
     constant size (lgConfigK=12 ⇒ ~2.5 KB), not O(users); the rollup
     column is the estimate, within ~1.6% stderr at any cardinality."""
 
-    contrib_path = rollup_path.rstrip("/") + "_contrib"
+    def contribution(batch_df: DataFrame) -> DataFrame:
+        return batch_df.groupBy(
+            F.to_date(F.col("ts")).alias("day"), F.col("event_type")
+        ).agg(F.hll_sketch_agg("user_id", 12).alias("sk"))
 
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        _guard_ledger_epoch(spark, contrib_path, rollup_path, batch_id)
-        contrib = (
-            batch_df.groupBy(
-                F.to_date(F.col("ts")).alias("day"), F.col("event_type")
-            )
-            .agg(F.hll_sketch_agg("user_id", 12).alias("sk"))
-            # tiny (days × event_types rows of ~2.5 KB sketches):
-            # materialize once, reuse for the day-list AND the ledger write
-            .localCheckpoint()
-        )
-        days = [r["day"] for r in contrib.select("day").distinct().collect()]
-        if not days:
-            return
-        # contrib derives from batch_df → the per-batch session CLONE; the
-        # merged rebuild derives from spark.read → the outer session. BOTH
-        # need dynamic overwrite (see _dynamic_overwrite; the count rollup
-        # sidesteps the clone by rebuilding contrib via createDataFrame on
-        # the outer session).
-        with _dynamic_overwrite(spark, contrib.sparkSession):
-            contrib.withColumn("batch_id", F.lit(int(batch_id))).write.partitionBy(
-                "day", "batch_id"
-            ).mode("overwrite").parquet(contrib_path)
-            merged = (
-                spark.read.parquet(contrib_path)
-                .where(F.col("day").isin(days))
-                .groupBy("day", "event_type")
-                .agg(
-                    F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("est_users")
-                )
-            )
-            merged.write.partitionBy("day").mode("overwrite").parquet(rollup_path)
-
-    run_foreach_batch(stream, upsert, mode="append")
+    _run_ledger_rollup(
+        spark,
+        stream,
+        rollup_path,
+        contribution,
+        {"sk": "hll_union"},
+        finish=lambda merged: merged.select(
+            "day", "event_type", F.hll_sketch_estimate("sk").alias("est_users")
+        ),
+    )
 
 
 def read_distinct_rollup(spark: SparkSession, rollup_path: str) -> DataFrame:
@@ -470,82 +513,46 @@ def run_incremental_cms_rollup(
     (unlike HLL's estimate-lossless-but-approximate register-max, CM merge
     is exact by construction; asserted in tests).
 
-    Same exactly-once ledger design as the other two rollups: the batch's
-    (day, d, bucket, cnt) rows land in a ``(day, batch_id)``-keyed ledger
-    partition via dynamic partition overwrite (a replayed batch overwrites
-    its own cells with identical deterministic content), then the touched
-    days' rollup sketches are rebuilt as the ledger sum. Per batch the
-    state is O(days × depth × width) counters regardless of event volume
-    or user skew — a hot user folds into one counter per (day, d)."""
-    contrib_path = rollup_path.rstrip("/") + "_contrib"
+    Same exactly-once ledger upsert as the other three rollups
+    (:func:`_run_ledger_rollup`): the batch's (day, d, bucket, cnt, w)
+    rows land in ``(day, batch_id)``-keyed ledger cells, then the touched
+    days' rollup sketches are rebuilt as the ledger sum. The width rides
+    along as the stamped ``w`` column, so the rebuilt rollup stays
+    self-describing for cm_estimate; a ledger stamped with another width
+    is refused before any write. Pre-stamp ledger files (written before
+    the ``w`` stamp existed) surface NULL ``w``; the rebuild folds them
+    into the stamped cell instead of splitting one (day, d, bucket)
+    counter across w=NULL/w=width rows (a split cm_estimate would reject —
+    or, unguarded, silently undercount). Per batch the state is
+    O(days × depth × width) counters regardless of event volume or user
+    skew — a hot user folds into one counter per (day, d)."""
+    from distributed_graph_database_system_spark.operators.sketch import cm_sketch
 
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        _guard_ledger_epoch(spark, contrib_path, rollup_path, batch_id)
-        from distributed_graph_database_system_spark.operators.sketch import (
-            cm_sketch,
-        )
-
-        # THE canonical bucket pipeline (operators/sketch.py) with a per-day
-        # group — the persisted ledger must stay byte-compatible with
-        # cm_estimate probes, so the hashing scheme is defined exactly once.
-        contrib = cm_sketch(
+    def contribution(batch_df: DataFrame) -> DataFrame:
+        # THE canonical bucket pipeline (operators/sketch.py) with a
+        # per-day group — the persisted ledger must stay byte-compatible
+        # with cm_estimate probes, so the hashing scheme is defined once.
+        return cm_sketch(
             batch_df.select(F.to_date(F.col("ts")).alias("day"), "user_id"),
             "user_id",
             depth=depth,
             width=width,
             group_cols=("day",),
-        ).localCheckpoint()
-        days = [r["day"] for r in contrib.select("day").distinct().collect()]
-        if not days:
-            return
-        # same cloned-session gotcha as run_incremental_distinct_rollup:
-        # dynamic overwrite must be set on BOTH the batch clone (ledger
-        # write) and the outer session (rollup rebuild).
-        with _dynamic_overwrite(spark, contrib.sparkSession):
-            contrib.withColumn(
-                "batch_id", F.lit(int(batch_id))
-            ).write.partitionBy("day", "batch_id").mode("overwrite").parquet(
-                contrib_path
-            )
-            ledger = spark.read.option("mergeSchema", "true").parquet(
-                contrib_path
-            )
-            if "w" not in ledger.columns:
-                ledger = ledger.withColumn("w", F.lit(None).cast("int"))
-            else:
-                # stamping legacy NULL-w rows with THIS call's width is only
-                # sound if the stamped rows agree with it — a legacy ledger
-                # built at width 128 replayed with width=256 would otherwise
-                # silently sum incompatible counters cell-for-cell
-                ext = ledger.agg(
-                    F.min("w").alias("lo"), F.max("w").alias("hi")
-                ).first()
-                for v in (ext["lo"], ext["hi"]):
-                    if v is not None and v != width:
-                        raise ValueError(
-                            f"cms rollup: ledger stamped w={v} but this "
-                            f"rollup runs width={width} — widths must match"
-                        )
-            merged = (
-                ledger.where(F.col("day").isin(days))
-                # "w" rides along as a group key (constant per ledger) so the
-                # rebuilt rollup stays self-describing for cm_estimate.
-                # Pre-stamp contrib files (written before the w stamp
-                # existed) surface NULL w; the ledger's width is fixed by
-                # this function's own parameter, so coalescing folds the
-                # legacy rows into the stamped cell instead of splitting
-                # one (day, d, bucket) counter across w=NULL/w=width rows
-                # (a split cm_estimate would reject — or, unguarded,
-                # silently undercount).
-                .withColumn("w", F.coalesce(F.col("w"), F.lit(width).cast("int")))
-                .groupBy("day", "d", "bucket", "w")
-                .agg(F.sum("cnt").alias("cnt"))
-            )
-            merged.write.partitionBy("day").mode("overwrite").parquet(
-                rollup_path
-            )
+        )
 
-    run_foreach_batch(stream, upsert, mode="append")
+    _run_ledger_rollup(
+        spark,
+        stream,
+        rollup_path,
+        contribution,
+        {"cnt": "sum"},
+        stamp=(
+            "w",
+            width,
+            lambda lo, hi: f"cms rollup: ledger stamped w={lo}..{hi} but this "
+            f"rollup runs width={width} — widths must match",
+        ),
+    )
 
 
 def run_incremental_kmv_rollup(
@@ -578,14 +585,10 @@ def run_incremental_kmv_rollup(
     from distributed_graph_database_system_spark.operators.sketch import (
         KMV_SPACE,
         kmv_sketch,
-        kmv_union_expr,
     )
 
-    contrib_path = rollup_path.rstrip("/") + "_contrib"
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        _guard_ledger_epoch(spark, contrib_path, rollup_path, batch_id)
-        contrib = (
+    def contribution(batch_df: DataFrame) -> DataFrame:
+        return (
             kmv_sketch(
                 batch_df.select(
                     F.to_date(F.col("ts")).alias("day"), "event_type", "user_id"
@@ -597,52 +600,34 @@ def run_incremental_kmv_rollup(
             .groupBy("day", "event_type")
             .agg(F.sort_array(F.collect_list("h")).alias("hs"))
             .withColumn("kk", F.lit(int(k)).cast("int"))
-            .localCheckpoint()
         )
-        days = [r["day"] for r in contrib.select("day").distinct().collect()]
-        if not days:
-            return
-        # validate the EXISTING ledger's k BEFORE writing this batch's
-        # cells: a misconfigured upsert must refuse without side effects,
-        # or its committed wrong-k cells would brick every later
-        # correct-k upsert against the same ledger
-        fs, contrib_p, _ = _ledger_fs(spark, contrib_path)
-        if fs.exists(contrib_p):
-            ks = spark.read.parquet(contrib_path).agg(
-                F.min("kk"), F.max("kk")
-            ).first()
-            if ks[0] != ks[1] or ks[0] != k:
-                raise ValueError(
-                    f"kmv rollup: ledger stamped kk={ks[0]}..{ks[1]} but "
-                    f"this rollup runs k={k} — k is fixed per ledger"
-                )
-        with _dynamic_overwrite(spark, contrib.sparkSession):
-            contrib.withColumn("batch_id", F.lit(int(batch_id))).write.partitionBy(
-                "day", "batch_id"
-            ).mode("overwrite").parquet(contrib_path)
-            merged = (
-                spark.read.parquet(contrib_path)
-                .where(F.col("day").isin(days))
-                .groupBy("day", "event_type", "kk")
-                .agg(kmv_union_expr("hs").alias("hs"))
-                .withColumn(
-                    "est_users",
-                    F.when(
-                        F.size("hs") < F.col("kk"),
-                        F.size("hs").cast("double"),
-                    ).otherwise(
-                        (F.col("kk") - 1).cast("double")
-                        * F.lit(float(KMV_SPACE))
-                        / F.element_at("hs", F.col("kk")).cast("double")
-                    ),
-                )
-                .select("day", "event_type", "hs", "kk", "est_users")
-            )
-            merged.write.partitionBy("day").mode("overwrite").parquet(
-                rollup_path
-            )
 
-    run_foreach_batch(stream, upsert, mode="append")
+    def finish(merged: DataFrame) -> DataFrame:
+        return merged.withColumn(
+            "est_users",
+            F.when(
+                F.size("hs") < F.col("kk"), F.size("hs").cast("double")
+            ).otherwise(
+                (F.col("kk") - 1).cast("double")
+                * F.lit(float(KMV_SPACE))
+                / F.element_at("hs", F.col("kk")).cast("double")
+            ),
+        ).select("day", "event_type", "hs", "kk", "est_users")
+
+    _run_ledger_rollup(
+        spark,
+        stream,
+        rollup_path,
+        contribution,
+        {"hs": "kmv_union"},
+        finish=finish,
+        stamp=(
+            "kk",
+            k,
+            lambda lo, hi: f"kmv rollup: ledger stamped kk={lo}..{hi} but "
+            f"this rollup runs k={k} — k is fixed per ledger",
+        ),
+    )
 
 
 def read_kmv_rollup(spark: SparkSession, rollup_path: str) -> DataFrame:
@@ -672,9 +657,10 @@ def compact_contrib_ledger(
     sources/layout.py cannot help because it preserves the hive chain,
     and the chain itself is the growth).
 
-    ``value_aggs`` maps each value column to its merge function —
-    ``"sum"`` (additive counters: counts, CM cells, decimal sums),
-    ``"max"`` (register-max merges), ``"hll_union"`` (HLL sketch
+    ``value_aggs`` maps each value column to its merge function, a
+    :data:`_MERGES` name (the table the rollup rebuild also merges
+    through) — ``"sum"`` (additive counters: counts, CM cells, decimal
+    sums), ``"max"`` (register-max merges), ``"hll_union"`` (HLL sketch
     binaries), ``"kmv_union"`` (bottom-k hash arrays; requires the
     stamped ``kk`` column, which is a group key, as the truncation
     bound). Every other non-``batch_id`` column is a group key. All
@@ -698,28 +684,15 @@ def compact_contrib_ledger(
     (``_guard_ledger_epoch``), instead of silently folding live batches
     as committed.
 
-    Swap order is compact()'s crash-safe one: stage to a tmp sibling,
-    originals aside to a recoverable ``__fold_bak``, staged dir in, only
-    then drop the backup. A mid-swap crash leaves the ledger absent →
-    the rerun fails loudly at spark.read with the backup intact.
+    The swap is compact()'s crash-safe one (``sources.layout.swap_dir``,
+    tag ``fold``): stage to a tmp sibling, originals aside to a
+    recoverable ``__fold_bak``, staged dir in, only then drop the backup.
+    A mid-swap crash leaves the ledger absent → the rerun fails loudly at
+    spark.read with the backup intact.
 
     Returns ``{"folded_cells", "partitions_before", "partitions_after"}``.
     """
-    from distributed_graph_database_system_spark.operators.sketch import (
-        kmv_union_expr as _kmv_union_expr,
-    )
-
-    _AGGS = {
-        "sum": F.sum,
-        "max": F.max,
-        "hll_union": F.hll_union_agg,
-        # kk is a grouping column (constant per ledger), so referencing it
-        # inside the aggregate expression is legal and truncates the folded
-        # union back to the sketch bound; the expression is THE shared
-        # definition (operators/sketch.py) the rollup rebuild also uses
-        "kmv_union": _kmv_union_expr,
-    }
-    unknown = {a for a in value_aggs.values() if a not in _AGGS}
+    unknown = {a for a in value_aggs.values() if a not in _MERGES}
     if unknown:
         raise ValueError(f"compact_contrib_ledger: unknown agg(s) {unknown}")
     led = spark.read.option("mergeSchema", "true").parquet(contrib_path)
@@ -745,32 +718,19 @@ def compact_contrib_ledger(
     folded = (
         led.where(F.col("batch_id") < max_bid)
         .groupBy(*group_cols)
-        .agg(*[_AGGS[a](c).alias(c) for c, a in value_aggs.items()])
+        .agg(*[_MERGES[a](c).alias(c) for c, a in value_aggs.items()])
         .withColumn("batch_id", F.lit(-1))
         .select(*led.columns)
     )
     new_ledger = folded.unionByName(
         led.where(F.col("batch_id") == max_bid).select(*led.columns)
     )
-
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(contrib_path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    tmp = contrib_path.rstrip("/") + "__fold_tmp"
-    bak = contrib_path.rstrip("/") + "__fold_bak"
-    tmp_p = jvm.org.apache.hadoop.fs.Path(tmp)
-    bak_p = jvm.org.apache.hadoop.fs.Path(bak)
-    fs.delete(tmp_p, True)
-    new_ledger.write.partitionBy("day", "batch_id").mode("overwrite").parquet(
-        tmp
+    swap_dir(
+        spark,
+        contrib_path,
+        "fold",
+        new_ledger.write.partitionBy("day", "batch_id").mode("overwrite").parquet,
     )
-    fs.delete(bak_p, True)
-    if not fs.rename(hpath, bak_p):
-        raise IOError(f"ledger fold: backup rename {contrib_path} failed")
-    if not fs.rename(tmp_p, hpath):
-        fs.rename(bak_p, hpath)  # roll back; ledger restored
-        raise IOError(f"ledger fold: swap-in failed for {contrib_path}")
-    fs.delete(bak_p, True)
     # record the fold epoch INSIDE the new dir: every id < max_bid is now
     # committed-and-folded; _guard_ledger_epoch rejects upserts below it
     # (fresh-checkpoint id restarts). A crash before this write loses only

@@ -7,6 +7,7 @@ no Exchange feeding a bucketed join, PartitionFilters on a pruned scan.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from distributed_graph_database_system_spark.queries.layout import (
@@ -354,38 +355,62 @@ def test_surgical_delete_handles_escaped_partition_values(spark, tmp_path):
     assert not any("us" in d for d in os.listdir(path) if "=" in d)
 
 
-def test_surgical_delete_rerun_after_crash_restores_backup(spark, tmp_path):
+@pytest.mark.parametrize(
+    "op, tag",
+    [
+        pytest.param("surgical_delete", "delete", id="surgical_delete"),
+        pytest.param("merge_into", "merge", id="merge_into"),
+    ],
+)
+def test_surgical_delete_rerun_after_crash_restores_backup(spark, tmp_path, op, tag):
     """Crash-injection for the rerun-after-crash data-loss bug: a prior
     run that died BETWEEN renaming originals aside and renaming survivors
-    in leaves `path` readable-but-missing partitions and `__delete_bak`
+    in leaves `path` readable-but-missing partitions and `__<tag>_bak`
     holding the only copy of their rows. The rerun used to
     fs.delete(bak) unconditionally — destroying those rows. It must
     instead restore the missing partitions from the backup first, then
-    complete the delete with zero survivor loss."""
+    complete the delete with zero survivor loss. Both per-partition
+    rewrites share the recovery: surgical_delete by predicate, and
+    merge_into with an empty upsert plus a delete frame of the same rows."""
     import os
     import shutil
 
     from pyspark.sql import functions as F
 
-    from distributed_graph_database_system_spark.sources.layout import surgical_delete
+    from distributed_graph_database_system_spark.sources.layout import (
+        merge_into,
+        surgical_delete,
+    )
 
     path = str(tmp_path / "crash_ds")
     rows = [(i, ["a", "b", "c"][i % 3], i % 7 == 0) for i in range(210)]
     df = spark.createDataFrame(rows, "id INT, g STRING, doomed BOOLEAN")
     df.write.partitionBy("g").mode("overwrite").parquet(path)
 
+    def delete_rows(predicate) -> int:
+        if op == "surgical_delete":
+            return surgical_delete(spark, path, predicate)["deleted_rows"]
+        stats = merge_into(
+            spark,
+            path,
+            spark.createDataFrame([], df.schema),
+            ["id"],
+            deletes=df.where(predicate).select("id"),
+        )
+        return stats["deleted"]
+
     # Simulate the crashed first half of a delete targeting partitions
     # a and b: their directories were renamed aside; no survivor came back.
-    bak = path + "__delete_bak"
+    bak = f"{path}__{tag}_bak"
     os.makedirs(bak)
     for g in ("g=a", "g=b"):
         os.rename(f"{path}/{g}", f"{bak}/{g}")
     # Stale staging from the same crashed run, with a partial survivor set
     # that must NOT be trusted (rerun recomputes survivors from scratch).
-    tmp = path + "__delete_tmp"
+    tmp = f"{path}__{tag}_tmp"
     os.makedirs(f"{tmp}/g=a")
 
-    stats = surgical_delete(spark, path, F.col("doomed"))
+    deleted = delete_rows(F.col("doomed"))
     assert not os.path.exists(bak) and not os.path.exists(tmp)
 
     after = spark.read.parquet(path)
@@ -394,7 +419,7 @@ def test_surgical_delete_rerun_after_crash_restores_backup(spark, tmp_path):
     assert after.where("doomed").count() == 0
     expect = sorted(i for i, _g, d in rows if not d)
     assert sorted(r.id for r in after.select("id").collect()) == expect
-    assert stats["deleted_rows"] == sum(1 for _i, _g, d in rows if d)
+    assert deleted == sum(1 for _i, _g, d in rows if d)
 
     # Mixed-progress crash: partition c's staged survivor rename COMPLETED
     # (its path dir already holds post-delete data) while its bak dir still
@@ -404,8 +429,7 @@ def test_surgical_delete_rerun_after_crash_restores_backup(spark, tmp_path):
     )
     os.makedirs(f"{bak}")
     shutil.copytree(f"{path}/g=c", f"{bak}/g=c")
-    stats2 = surgical_delete(spark, path, F.lit(False))
-    assert stats2["deleted_rows"] == 0
+    assert delete_rows(F.lit(False)) == 0
     assert not os.path.exists(bak)
     after_c = sorted(
         r.id for r in spark.read.parquet(path).where("g = 'c'").collect()

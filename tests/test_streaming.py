@@ -585,6 +585,27 @@ def test_incremental_cms_rollup_is_exact_merge_and_replay_safe(
     upsert(b1, 1)  # replay
     assert rows_set(EV.read_cms_rollup(spark, path2), cols) == want
 
+    # a misconfigured width is refused BEFORE any write — the wrong-width
+    # batch must leave no cells behind (they would brick every later
+    # correct-width upsert), and the correct-width stream keeps working
+    captured_bad = {}
+    EV.run_foreach_batch = lambda stream, fn, mode="update": captured_bad.update(
+        fn=fn
+    )
+    try:
+        EV.run_incremental_cms_rollup(spark, None, path2, depth=5, width=128)
+    finally:
+        EV.run_foreach_batch = orig
+    with pytest.raises(ValueError, match="widths must match"):
+        captured_bad["fn"](b1, 2)
+    ws = {
+        r.w
+        for r in spark.read.parquet(path2 + "_contrib").select("w").distinct().collect()
+    }
+    assert ws == {256}, "wrong-width upsert left cells behind"
+    upsert(b1, 1)
+    assert rows_set(EV.read_cms_rollup(spark, path2), cols) == want
+
     # the rollup feeds cm_estimate directly: never undercounts a real user
     from distributed_graph_database_system_spark.operators.sketch import cm_estimate
 
